@@ -1,33 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.sources.Tables
 object Bench {
-  /** Default local parallelism when SPARK_GRAFT_CPUS is unset — shared
-    * with TimeQuery so A/B timings run under identical parallelism. */
-  val DefaultCpus = "4"
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", DefaultCpus)
-    // AQE runs with Spark's defaults here (enabled — round-15 ConfAB
-    // measured adaptive.enabled=false 2-3x WORSE at bench scale: the
-    // partition coalescing is load-bearing for tiny post-shuffle
-    // partitions). GraftSession pins the same flags explicitly.
     // shuffle width decoupled from executor threads: at bench SF most
     // post-shuffle partitions are tiny, so fewer/wider shuffle tasks cut
     // pure scheduler overhead while scans still use all threads
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.codegen.maxFields", "256")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val shuffle = sys.env.get("SPARK_GRAFT_SHUFFLE").map(_.trim.toInt).getOrElse(GraftSession.cpus)
+    val spark = GraftSession.builder(shufflePartitions = shuffle).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm up the session (codegen compiler, file listings) so the first
     // timed query doesn't absorb one-time init cost
-    Seq("documents", "lineitem", "events", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count() catch { case _: Throwable => () }
+    Seq(Tables.documents _, Tables.lineitem _, Tables.events _, Tables.embeddings _).foreach { t =>
+      try t(spark, sfDir).count() catch { case _: Throwable => () }
     }
     // ≥3 replicates with a per-query MEDIAN: single-shot timings on a
     // shared host confound code with noise (r7's phantom q52/q17

@@ -11,13 +11,19 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]",
+  /** Local parallelism of the default master: `SPARK_GRAFT_CPUS`, else 4. */
+  val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt).getOrElse(4)
+
+  def builder(master: String = s"local[$cpus]",
               shufflePartitions: Int = 32): SparkSession.Builder =
     SparkSession
       .builder()
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      // AQE's partition coalescing is load-bearing for the tiny
+      // post-shuffle partitions of small inputs: adaptive.enabled=false
+      // measured 2-3x slower over the query suite at sf0.1
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -362,7 +362,7 @@ object Graph {
       .localCheckpoint()
   }
 
-  private val basketCache =
+  private[graft] val basketCache =
     scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, String), DataFrame]
   /** Artifact-store name for the capped basket table. */
   val BasketsArtifact = "basket_items"

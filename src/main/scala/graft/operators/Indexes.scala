@@ -5,22 +5,23 @@ import org.apache.spark.sql.SparkSession
 
 /** Cross-session index lifecycle over the session artifacts — the
   * trained IVF codebook, the hierarchical cell assignment, the SQ8
-  * stats, the BPE merge table, and the three near-dup detector pair
-  * sets (minhash-verified, simhash, containment).
+  * stats, the BPE merge table, the capped basket table, and the three
+  * near-dup detector pair sets (minhash-verified, simhash,
+  * containment).
   *
   * `persistAll` writes each artifact to the configured
   * `spark.graft.indexDir` store (building in-session first if needed);
   * a LATER session with the same conf then resolves every artifact
   * consumer (q57/q73/q82/q83/q85/q86/q87 cells, the seven q12-pair
-  * consumers) from the persisted parquet instead of rebuilding — the
-  * deployment shape where the index is built once per corpus ingest
-  * and every subsequent job reopens it. Explicit write, implicit read:
-  * queries never silently persist, but always prefer a persisted
-  * artifact when one exists.
+  * consumers, the basket-affinity queries) from the persisted parquet
+  * instead of rebuilding — the deployment shape where the index is
+  * built once per corpus ingest and every subsequent job reopens it.
+  * Explicit write, implicit read: queries never silently persist, but
+  * always prefer a persisted artifact when one exists.
   */
 object Indexes {
 
-  /** Build (or reuse) and persist all seven index artifacts for a
+  /** Build (or reuse) and persist all eight index artifacts for a
     * corpus. Requires `spark.graft.indexDir` to be set. */
   def persistAll(spark: SparkSession, sfDir: String): Unit = {
     IndexStore.write(spark, Similarity.trainedCodebook(spark, sfDir),
@@ -37,6 +38,8 @@ object Indexes {
       Similarity.SqStatsArtifact, sfDir)
     IndexStore.write(spark, TextAnalysis.trainedBpeMerges(spark, sfDir),
       TextAnalysis.BpeMergesArtifact, sfDir)
+    IndexStore.write(spark, Graph.basketArtifact(spark, sfDir),
+      Graph.BasketsArtifact, sfDir)
   }
 
   /** Drop this session's in-memory artifact entries so the next access
@@ -52,5 +55,6 @@ object Indexes {
     IndexStore.evict(Dedup.simhashPairsCache, spark)
     IndexStore.evict(Dedup.containmentPairsCache, spark)
     IndexStore.evict(TextAnalysis.bpeMergesCache, spark)
+    IndexStore.evict(Graph.basketCache, spark)
   }
 }

@@ -102,16 +102,13 @@ object Tables {
     * every graded output is keyed or explicitly ordered, never
     * partition-dependent. */
   def spread(spark: SparkSession, df: DataFrame): DataFrame = {
-    // Width is capped (default 16, env-tunable): past that, per-task
-    // fixed costs (task-binary deserialize, operator init) outweigh the
-    // extra parallelism for the single-small-file inputs this guard
-    // exists for — measured at local[32]: a mid-weight token chain ran
-    // 0.25 s at width 8-16 vs 0.35 s at width 32 vs 0.36-2.9 s unspread.
+    // Width is capped (at 16): past that, per-task fixed costs
+    // (task-binary deserialize, operator init) outweigh the extra
+    // parallelism for the single-small-file inputs this guard exists
+    // for — measured at local[32]: a mid-weight token chain ran 0.25 s
+    // at width 8-16 vs 0.35 s at width 32 vs 0.36-2.9 s unspread.
     // Real multi-file inputs never reach the repartition branch at all.
-    val cap = spark.conf.getOption("spark.graft.spread.max")
-      .orElse(sys.env.get("SPARK_GRAFT_SPREAD"))
-      .flatMap(_.trim.toIntOption).getOrElse(16)
-    val target = math.min(spark.sparkContext.defaultParallelism, cap)
+    val target = math.min(spark.sparkContext.defaultParallelism, 16)
     if (target > 1 && df.rdd.getNumPartitions < target) df.repartition(target)
     else df
   }

@@ -148,11 +148,7 @@ object EventStream {
   private def withStatePartitions[A](spark: SparkSession, n: Int)(f: => A): A = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
-    // bounded graded runs size state stores to their load (see doc
-    // above); spark.graft.state.partitions overrides for sizing A/Bs
-    val eff = spark.conf.getOption("spark.graft.state.partitions")
-      .flatMap(_.trim.toIntOption).getOrElse(n)
-    spark.conf.set(key, eff.toString)
+    spark.conf.set(key, n.toString)
     try f finally spark.conf.set(key, prev)
   }
 

@@ -7,7 +7,7 @@ object ExplainDump {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val spark = GraftSession.builder("local[4]").getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val df =
       if (name == "_minhash_sigs") graft.operators.Dedup.minhashSignatures(spark, sfDir)

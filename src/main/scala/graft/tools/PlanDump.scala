@@ -9,7 +9,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val which = if (args.length > 1) args(1) else "q17cand"
-    val spark = GraftSession.builder("local[8]").getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val df = which match {
       case "q17cand" => Similarity.annLshCandidates(spark, sfDir)

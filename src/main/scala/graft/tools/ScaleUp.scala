@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.GraftSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthesize a 10× scale-up of an existing testdata dir for the sf1
@@ -50,12 +51,8 @@ object ScaleUp {
     // element_at would return null and null out every text column
     require(factor >= 1 && factor <= 26,
       s"factor must be in [1, 26] (a-z replica tags), got $factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = GraftSession.builder(shufflePartitions = GraftSession.cpus)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -35,6 +35,19 @@ class PartitionSpec extends SparkSuite {
     assert(viaQuery == direct)
   }
 
+  test("spread widens a single-file scan to min(parallelism, 16) and leaves wide frames alone") {
+    val docs = graft.sources.Tables.documents(spark, sf)
+    assert(docs.rdd.getNumPartitions == 1, "sf0.001 documents is one single-split file")
+    val target = math.min(spark.sparkContext.defaultParallelism, 16)
+    val spread = graft.sources.Tables.spread(spark, docs)
+    assert(spread.rdd.getNumPartitions == target)
+    val wide = docs.repartition(target)
+    val same = graft.sources.Tables.spread(spark, wide)
+    assert(same eq wide)
+    assert(same.queryExecution.logical == wide.queryExecution.logical)
+    assert(same.rdd.getNumPartitions == target)
+  }
+
   test("MapReduce API result is stable under repartitioning") {
     import graft.SparkSuite.implicits._
     val src = graft.sources.Tables.events(spark, sf)

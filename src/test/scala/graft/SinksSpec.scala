@@ -25,13 +25,13 @@ class SinksSpec extends SparkSuite {
   }
 
   test("index store: persisted artifacts are read back instead of rebuilt") {
-    import graft.operators.{Dedup, Indexes, Similarity}
+    import graft.operators.{Dedup, Graph, Indexes, Similarity}
     import graft.sources.IndexStore
     val dir = tmp() + "/indexes"
     val key = (r: org.apache.spark.sql.Row) => r.getLong(0) -> r.getLong(1)
     try {
       spark.conf.set(IndexStore.ConfKey, dir)
-      // build + persist all three artifacts
+      // build + persist the artifacts
       val codebook = Similarity.trainedCodebook(spark, sf).collect().map(_.toString).sorted
       val cells = Similarity.hierCells(spark, sf)
         .select(col("vec_id"), col("tc")(0)("id")).collect().map(key).toMap
@@ -40,7 +40,11 @@ class SinksSpec extends SparkSuite {
         .collect().map(_.toString).sorted
       val contPairs = Dedup.verifiedContainmentPairs(spark, sf)
         .collect().map(_.toString).sorted
+      val baskets = Graph.basketArtifact(spark, sf).collect().map(_.toString).sorted
       Indexes.persistAll(spark, sf)
+      assert(new java.io.File(
+        IndexStore.artifactPath(dir, Graph.BasketsArtifact, sf)).exists(),
+        "persistAll skipped the basket_items artifact")
       // a fresh resolution (empty caches = what a new session sees)
       // must return the persisted rows
       Indexes.evictSession(spark)
@@ -54,6 +58,8 @@ class SinksSpec extends SparkSuite {
         .sameElements(simPairs))
       assert(Dedup.verifiedContainmentPairs(spark, sf).collect().map(_.toString).sorted
         .sameElements(contPairs))
+      assert(Graph.basketArtifact(spark, sf).collect().map(_.toString).sorted
+        .sameElements(baskets))
       // prove the store (not a rebuild) is the source: tamper the
       // persisted codebook and assert the tampered row comes back
       val p = IndexStore.artifactPath(dir, Similarity.CodebookArtifact, sf)

@@ -13,7 +13,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * local mode), every later test in the suite keeps the corpse and
   * fails with it. The accessor re-checks `isStopped` on every call and
   * rebuilds the session if the context is gone, so one fatal event
-  * costs at most the test it happened in, not the rest of the run. */
+  * costs at most the test it happened in, not the rest of the run.
+  *
+  * Two limits: a suite-level `lazy val` DataFrame stays bound to the
+  * session it was first built on, so after a rebuild it still points
+  * at the dead context (build frames per test through `spark`); and
+  * once the JVM is shutting down (Spark's shutdown hook has stopped
+  * the context) there is no rebuild — `session()` fails fast instead
+  * of starting a new context inside harness teardown. */
 trait SparkSuite extends AnyFunSuite {
   def spark: SparkSession = SparkSuite.session()
   val sf = "/root/testdata/sf0.001"
@@ -25,6 +32,10 @@ object SparkSuite {
   def session(): SparkSession = {
     val c = cached
     if (c != null && !c.sparkContext.isStopped) c
+    else if (org.apache.hadoop.util.ShutdownHookManager.get().isShutdownInProgress)
+      throw new IllegalStateException(
+        "SparkSuite.session() called during harness teardown (JVM shutdown in progress); " +
+          "not rebuilding the stopped SparkContext")
     else synchronized {
       if (cached == null || cached.sparkContext.isStopped) {
         val s = GraftSession.builder("local[4]", 8).getOrCreate()
