@@ -8,6 +8,10 @@ import org.apache.spark.sql.SparkSession
   * applies unchanged — AQE handles runtime partition coalescing and skew
   * splitting, so `shuffle.partitions` here is an upper bound for local
   * mode, not a cluster tuning knob.
+  *
+  * Every session-wide setting lives here, set once at build time: the
+  * sources read with whatever the session holds and never change it,
+  * so no result depends on which query ran first.
   */
 object GraftSession {
 
@@ -45,6 +49,10 @@ object GraftSession {
       // the 100 TB plans in PLANS.md depend on it, and PlanSpec
       // demonstrates the injection under forced thresholds.
       .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+      // `events.ts` ships as parquet TIMESTAMP(NANOS) in some testdata
+      // vintages, which Spark reads only in this legacy mode (as BIGINT
+      // ns; `Tables.normalizeTs` converts it back to a timestamp)
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
 
   def get(): SparkSession = {

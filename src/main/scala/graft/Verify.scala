@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.SparkSession
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -11,14 +12,31 @@ object Verify {
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val spark = GraftSession.builder(shufflePartitions = GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val failed = try run(spark, sfDir, outDir, only) finally spark.stop()
+    if (failed.nonEmpty) {
+      val total = SparkEntry.queries.keys.count(k => only.forall(_.contains(k)))
+      System.err.println(
+        s"[verify] ${failed.size} of $total queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
+  }
+
+  /** Writes each selected query's result to `$outDir/<name>` and the full
+    * oracle map to `$outDir/oracle_sql.json`; returns the names of the
+    * queries that threw. */
+  def run(spark: SparkSession, sfDir: String, outDir: String,
+          only: Option[Set[String]]): Seq[String] = {
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    val failed = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
+      .flatMap { case (name, fn) =>
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name)
         }
       }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -43,6 +61,6 @@ object Verify {
       .map { case (k, v) => k -> v.replace("__SFDIR__", sfDir) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    failed
   }
 }

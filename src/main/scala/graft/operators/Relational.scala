@@ -694,7 +694,7 @@ object Relational {
     * Scale shape: the corpus-sized work is ONE partial-aggregable
     * (event_type, week) count; the window runs partitioned by
     * event_type over the ≤|weeks| aggregated rows per type — bounded
-    * post-agg data, not row data (the ScaleShapeSpec contract). */
+    * post-agg data, not row data (the QueriesSpec contract). */
   def anomalyWeeks(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.Column
     import org.apache.spark.sql.expressions.Window
@@ -1600,7 +1600,7 @@ object Relational {
     * sized, ~2.4k rows for TPC-H's range at any SF), and the trailing
     * window runs over the SPINE only — unpartitioned but
     * domain-bounded, never corpus rows (whitelisted in
-    * ScaleShapeSpec like q53/q61/q173). */
+    * QueriesSpec like q53/q61/q173). */
   def dateSpine(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val daily = Tables.orders(spark, sfDir)
@@ -2978,7 +2978,7 @@ object Relational {
     *
     * Scale shape: one (day) partial-aggregable count; the cumulative
     * window runs over the DAY domain (≤ a few thousand rows at any
-    * SF — ScaleShapeSpec-whitelisted like q188's spine); totals ride
+    * SF — QueriesSpec-whitelisted like q188's spine); totals ride
     * a broadcast 1-row aggregate; output is |days| rows. */
   def changepoint(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window

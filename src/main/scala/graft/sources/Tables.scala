@@ -26,17 +26,17 @@ object Tables {
   def part(spark: SparkSession, sfDir: String): DataFrame      = table(spark, sfDir, "part")
   def orders(spark: SparkSession, sfDir: String): DataFrame    = table(spark, sfDir, "orders")
   def lineitem(spark: SparkSession, sfDir: String): DataFrame  = table(spark, sfDir, "lineitem")
-  /** `events.ts` is parquet TIMESTAMP(NANOS), which Spark only reads via
-    * the nanosAsLong legacy mode; we convert back to a timestamp column
-    * (µs precision) so downstream windows/watermarks work unchanged.
+  /** `events.ts` may be parquet TIMESTAMP(NANOS), which Spark only reads
+    * via the nanosAsLong legacy mode (a session default set once in
+    * `GraftSession.builder`; reading a table changes no session conf);
+    * we convert back to a timestamp column (µs precision) so downstream
+    * windows/watermarks work unchanged.
     * The ns→µs step is `div` (integral division): `/` would promote to
     * double, whose 256-ns ulp at epoch-nanosecond magnitude can truncate
     * one µs low at exact boundaries and flip window/session assignment
     * vs the ns-exact oracle. */
-  def events(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def events(spark: SparkSession, sfDir: String): DataFrame =
     normalizeTs(table(spark, sfDir, "events"))
-  }
 
   /** The testdata generator has shipped `events.ts` as both
     * TIMESTAMP(NANOS) (read as BIGINT ns under nanosAsLong) and plain
@@ -72,7 +72,6 @@ object Tables {
     .empty[String, org.apache.spark.sql.types.StructType]
 
   def eventsStream(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$sfDir/events.parquet"
     val rawSchema = streamSchemaCache.getOrElseUpdate(path,
       spark.read.parquet(path).schema)

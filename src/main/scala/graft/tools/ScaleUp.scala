@@ -51,9 +51,7 @@ object ScaleUp {
     // element_at would return null and null out every text column
     require(factor >= 1 && factor <= 26,
       s"factor must be in [1, 26] (a-z replica tags), got $factor")
-    val spark = GraftSession.builder(shufflePartitions = GraftSession.cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = GraftSession.builder(shufflePartitions = GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def replicas(df: DataFrame): DataFrame =

@@ -126,4 +126,21 @@ class EdgeCasesSpec extends SparkSuite {
     assert(Similarity.annLsh(spark, oneDir).count() == 0) // no partner in bucket
     assert(TextAnalysis.fingerprint(spark, oneDir).count() == 1)
   }
+
+  test("reading events changes no session conf; nanosAsLong is a session default") {
+    val s = spark.newSession()
+    val before = s.conf.getAll
+    graft.sources.Tables.events(s, sf)
+    graft.sources.Tables.eventsStream(s, sf)
+    assert(s.conf.getAll == before)
+    assert(s.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+  }
+
+  test("Verify.run returns the queries that threw and still writes oracle_sql.json") {
+    val out = Files.createTempDirectory("graft_verify")
+    val missing = out.resolve("no_such_sf").toString
+    val failed = Verify.run(spark, missing, out.toString, Some(Set("q02_filter_project")))
+    assert(failed == Seq("q02_filter_project"))
+    assert(Files.exists(out.resolve("oracle_sql.json")))
+  }
 }

@@ -29,6 +29,10 @@ class WordCountSpec extends SparkSuite {
     java.nio.file.Files.writeString(dir.resolve("a.txt"), "Hello world hello\nSpark counts Words")
     java.nio.file.Files.writeString(dir.resolve("b.txt"), "world of spark 42 spark!")
     java.nio.file.Files.writeString(dir.resolve("ignored.dat"), "should not be read")
+    // the reference enumerates the top level only
+    // (word-count-taskfile.lua:40-63): a nested file is not a task
+    java.nio.file.Files.createDirectory(dir.resolve("sub"))
+    java.nio.file.Files.writeString(dir.resolve("sub").resolve("c.txt"), "nested subdirectory spark")
     val got = WordCount.fromTextDir(spark, dir.toString)
       .as[(String, Long)].collect().toMap
     assert(got == Map(
