@@ -1,5 +1,6 @@
 package graft
 import graft.sources.Tables
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -25,20 +26,7 @@ object Bench {
     val subset = sys.env.get("SPARK_GRAFT_BENCH_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val queries = subset.fold(SparkEntry.queries)(s => SparkEntry.queries.filter(kv => s(kv._1)))
-    val names = queries.keys.toSeq
-    val times: Seq[Map[String, Double]] = (1 to reps).map { _ =>
-      queries.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        name -> (System.nanoTime() - t0) / 1e9
-      }
-    }
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    }
-    val results: Seq[(String, Double)] =
-      names.map(n => n -> median(times.map(_(n))))
+    val (results, failed) = time(spark, sfDir, queries.toSeq, reps)
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
@@ -92,5 +80,36 @@ object Bench {
     spark.stop()
     println(jsonShort)
     System.out.flush()
+    if (failed.nonEmpty) {
+      System.err.println(
+        s"[bench] ${failed.size} of ${queries.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
+  }
+
+  /** Runs each query `reps` times (build + `count`) and returns the
+    * per-query median seconds, in `queries` order, of the queries that
+    * never threw, plus the names of the queries that threw in any rep:
+    * a failed query has no time. */
+  def time(spark: SparkSession, sfDir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)],
+      reps: Int): (Seq[(String, Double)], Seq[String]) = {
+    val threw = scala.collection.mutable.Set.empty[String]
+    val times: Seq[Map[String, Double]] = (1 to reps).map { _ =>
+      queries.map { case (name, fn) =>
+        val t0 = System.nanoTime()
+        try fn(spark, sfDir).count() catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          threw += name
+        }
+        name -> (System.nanoTime() - t0) / 1e9
+      }.toMap
+    }
+    def median(xs: Seq[Double]): Double = {
+      val s = xs.sorted
+      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
+    }
+    val (failed, ok) = queries.map(_._1).partition(threw)
+    (ok.map(n => n -> median(times.map(_(n)))), failed)
   }
 }

@@ -39,9 +39,4 @@ object HashFunctions {
     * signed-64 range: (2·128+1) · 2^28 < 2^37. */
   def affine(h: Column, i: Int): Column =
     (h * lit(2L * i + 1) + lit(101L * i + 7)) % lit(P)
-
-  /** Same family applied lazily inside higher-order functions, where the
-    * hash index is itself a column. */
-  def affineCol(h: Column, i: Column): Column =
-    (h * (i * lit(2L) + lit(1L)) + i * lit(101L) + lit(7L)) % lit(P)
 }

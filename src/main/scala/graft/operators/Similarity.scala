@@ -348,11 +348,16 @@ object Similarity {
     * reads), NOT a data-path collect: bucket cardinality and centroid
     * count must be fixed before the plan is built, exactly like AQE
     * fixes shuffle partitioning from runtime statistics. Memoized per
-    * parquet directory, so chained queries over the same corpus pay the
-    * footer read once per session lifetime, not once per query call. */
-  private val sizeCache = scala.collection.concurrent.TrieMap.empty[String, Long]
-  private[graft] def corpusSize(spark: SparkSession, sfDir: String): Long =
-    sizeCache.getOrElseUpdate(sfDir, Tables.embeddings(spark, sfDir).count())
+    * (session, corpus), so chained queries over the same corpus pay the
+    * footer read once per session lifetime, not once per query call,
+    * and a corpus rewritten between sessions is counted afresh; entries
+    * of stopped sessions are dropped (the vocabSizeCache rule). */
+  private val sizeCache =
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
+  private[graft] def corpusSize(spark: SparkSession, sfDir: String): Long = {
+    sizeCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
+    sizeCache.getOrElseUpdate((spark, sfDir), Tables.embeddings(spark, sfDir).count())
+  }
 
   /** Session-scoped IVF index artifacts — the trained codebook and the
     * hierarchical corpus→cell assignment are DETERMINISTIC functions of

@@ -60,27 +60,33 @@ object Tables {
       case _ => raw
     }
   }
-  /** Streaming twin of [[events]]: the same parquet directory as a file
+  /** Streaming twin of [[events]]: the same parquet file as a file
     * source with the identical ns→µs conversion, so batch and streaming
-    * window queries run the same downstream code path. (File sources
-    * need an explicit schema; it comes from one metadata-only batch
-    * read of the same path.) */
-  // file-source schemas memoized per path: the metadata-only batch read
-  // is a parquet-footer job, and streaming paths that build several
-  // sources per run (q353's click+view pair) were paying it each time
-  private val streamSchemaCache = scala.collection.concurrent.TrieMap
-    .empty[String, org.apache.spark.sql.types.StructType]
+    * window queries run the same downstream code path. */
+  def eventsStream(spark: SparkSession, sfDir: String): DataFrame =
+    normalizeTs(singleFileStream(spark, sfDir, "events"))
 
-  def eventsStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val path = s"$sfDir/events.parquet"
-    val rawSchema = streamSchemaCache.getOrElseUpdate(path,
+  // file-source schemas memoized per (session, path): the metadata-only
+  // batch read is a parquet-footer job, and streaming paths that build
+  // several sources per run (q353's click+view pair) were paying it each
+  // time. Session scope keeps a rewritten path from serving a stale
+  // schema to a later session; entries of stopped sessions are dropped.
+  private val streamSchemaCache = scala.collection.concurrent.TrieMap
+    .empty[(SparkSession, String), org.apache.spark.sql.types.StructType]
+
+  /** The single-file table `$sfDir/$name.parquet` as a file stream.
+    * File sources need an explicit schema; it comes from one
+    * metadata-only batch read of the same path. The testdata table is a
+    * single FILE and the file stream source only anchors its base at a
+    * directory, so the file is addressed through a single-alternative
+    * glob — globbed paths keep the parent as base (at scale the table
+    * is simply a directory and none of this shows). */
+  private def singleFileStream(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    streamSchemaCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
+    val rawSchema = streamSchemaCache.getOrElseUpdate((spark, path),
       spark.read.parquet(path).schema)
-    // the testdata table is a single FILE; the file stream source only
-    // anchors its base at a directory, so address the file through a
-    // single-alternative glob — globbed paths keep the parent as base
-    // (at scale the table is simply a directory and none of this shows)
-    normalizeTs(
-      spark.readStream.schema(rawSchema).parquet(s"$sfDir/{events.parquet}"))
+    spark.readStream.schema(rawSchema).parquet(s"$sfDir/{$name.parquet}")
   }
 
   def documents(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "documents")
@@ -117,19 +123,10 @@ object Tables {
   def documentsSpread(spark: SparkSession, sfDir: String): DataFrame =
     spread(spark, documents(spark, sfDir))
 
-  /** [[embeddings]] with the [[spread]] guard — the base frame for the
-    * scan-side vector-math pipelines (ANN index builds, norms, PCA). */
-  def embeddingsSpread(spark: SparkSession, sfDir: String): DataFrame =
-    spread(spark, embeddings(spark, sfDir))
-
-  /** Streaming twin of [[documents]] (the [[eventsStream]] single-file
-    * glob trick; schema from one metadata-only batch read) — the
-    * ingestion-stream source for the graded stream-static paths. */
-  def documentsStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val rawSchema = streamSchemaCache.getOrElseUpdate(s"$sfDir/documents.parquet",
-      spark.read.parquet(s"$sfDir/documents.parquet").schema)
-    spark.readStream.schema(rawSchema).parquet(s"$sfDir/{documents.parquet}")
-  }
+  /** Streaming twin of [[documents]] — the ingestion-stream source for
+    * the graded stream-static paths. */
+  def documentsStream(spark: SparkSession, sfDir: String): DataFrame =
+    singleFileStream(spark, sfDir, "documents")
 
   /** Interchange readers — the read side of [[Sinks]]' csv/json
     * exports. Pass a schema whenever one is known: schema inference

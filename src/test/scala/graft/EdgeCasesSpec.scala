@@ -143,4 +143,38 @@ class EdgeCasesSpec extends SparkSuite {
     assert(failed == Seq("q02_filter_project"))
     assert(Files.exists(out.resolve("oracle_sql.json")))
   }
+
+  test("Bench.time drops and names the queries that threw") {
+    import org.apache.spark.sql.{DataFrame, SparkSession}
+    val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+      "q_ok" -> ((s, d) => graft.sources.Tables.events(s, d)),
+      "q_boom" -> ((_, _) => throw new IllegalStateException("bench test: boom")))
+    val (results, failed) = Bench.time(spark, sf, queries, reps = 2)
+    assert(failed == Seq("q_boom"))
+    assert(results.map(_._1) == Seq("q_ok") && results.head._2 > 0.0)
+  }
+
+  test("a rewritten events file streams with its new schema in a new session") {
+    import graft.SparkSuite.implicits._
+    import org.apache.spark.sql.functions.lit
+    val dir = Files.createTempDirectory("graft_stream_schema").toString
+    val events = Seq((new java.sql.Timestamp(0L), 1L, "click", 1.0))
+      .toDF("ts", "user_id", "event_type", "value")
+    events.write.mode("overwrite").parquet(s"$dir/events.parquet")
+    assert(!graft.sources.Tables.eventsStream(spark, dir).columns.contains("tag"))
+    events.withColumn("tag", lit("x"))
+      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+    assert(graft.sources.Tables.eventsStream(spark.newSession(), dir).columns.contains("tag"))
+  }
+
+  test("a rewritten embeddings corpus is counted afresh in a new session") {
+    import graft.SparkSuite.implicits._
+    val dir = Files.createTempDirectory("graft_corpus_size").toString
+    def writeVecs(n: Long): Unit = (0L until n).map(i => (i, Array.fill(4)(0.5f)))
+      .toDF("vec_id", "embedding").write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    writeVecs(1L)
+    assert(Similarity.corpusSize(spark, dir) == 1L)
+    writeVecs(3L)
+    assert(Similarity.corpusSize(spark.newSession(), dir) == 3L)
+  }
 }

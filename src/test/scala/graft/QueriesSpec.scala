@@ -140,6 +140,14 @@ class QueriesSpec extends SparkSuite {
       val a = df.schema.map(f => (f.name, f.dataType))
       val b = fn(spark, mid).schema.map(f => (f.name, f.dataType))
       assert(a == b, s"$name schema drifts between SFs:\n  $a\n  $b")
+
+      // a streamed query's drain leaves neither its memory-sink view
+      // nor a running query behind
+      val views = spark.catalog.listTables().collect().map(_.name)
+        .filter(_.startsWith("graft_stream_"))
+      assert(views.isEmpty, s"$name left streaming sink views: ${views.mkString(", ")}")
+      assert(spark.streams.active.isEmpty,
+        s"$name left active streaming queries: ${spark.streams.active.map(_.name).mkString(", ")}")
     }
   }
 }

@@ -431,4 +431,27 @@ class StreamingSpec extends SparkSuite {
       !spark.conf.get("spark.sql.streaming.stateStore.providerClass")
         .contains("RocksDB"))
   }
+
+  test("a failed drain rethrows and leaves no sink view, no active query, the shuffle width restored") {
+    import org.apache.spark.sql.functions.{col, udf}
+    val key = "spark.sql.shuffle.partitions"
+    val width = spark.conf.get(key)
+    val boom = udf { (u: Long) =>
+      if (u >= 0L) throw new IllegalStateException("drain test: boom")
+      u
+    }
+    val e = intercept[Exception] {
+      EventStream.drain(spark, "fail", OutputMode.Append())(
+        graft.sources.Tables.eventsStream(spark, sf).select(boom(col("user_id")).as("u")))(
+        identity)
+    }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage))
+    assert(messages.exists(_.contains("drain test: boom")), s"unexpected failure: $e")
+    val views = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("graft_stream_"))
+    assert(views.isEmpty, s"failed drain left its sink view: ${views.mkString(", ")}")
+    assert(spark.streams.active.isEmpty)
+    assert(spark.conf.get(key) == width)
+  }
 }
