@@ -87,6 +87,8 @@ object IndexStore {
       try {
         val fs = new org.apache.hadoop.fs.Path(p)
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        // not Tables.table: `write` overwrites an artifact on rebuild, so
+        // its schema must not be memoized for the rest of the session
         if (fs.exists(new org.apache.hadoop.fs.Path(p))) Some(spark.read.parquet(p))
         else None
       } catch { case _: java.io.IOException => None }

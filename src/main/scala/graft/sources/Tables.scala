@@ -6,18 +6,28 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Mirrors the reference's source-enumeration step
   * (`example/word-count-taskfile.lua:40-63` `read_source`: directory scan →
-  * (file, content) pairs) as declarative parquet scans: Spark's
-  * FileSourceScanExec enumerates and splits files across executors, which
-  * is the distributed equivalent of the reference's task generation
-  * (`word-count-taskfile.lua:82-88` `taskfn`).
+  * (file, content) pairs) as declarative file scans: each source names ONE
+  * root path, so Spark lists it on the driver and FileSourceScanExec
+  * splits the listed files across executors — the distributed equivalent
+  * of the reference's task generation (`word-count-taskfile.lua:82-88`
+  * `taskfn`).
   *
-  * All readers are plain `spark.read.parquet` so Catalyst can push filters
-  * and prune columns into the scan — at 100 TB the scan is the dominant
-  * cost and pushdown is the first-order optimization.
+  * Building a query over the parquet and text sources starts no Spark
+  * job: parquet tables are read with a schema memoized per (session,
+  * path) ([[schemaOf]]) instead of a schema-inference job per read, and
+  * Catalyst still pushes filters and prunes columns into the scan — at
+  * 100 TB the scan is the dominant cost and pushdown is the first-order
+  * optimization.
   */
 object Tables {
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** The parquet table `$sfDir/$name.parquet`, read with its memoized
+    * schema ([[schemaOf]]): within one session, a rewritten path keeps
+    * the schema it had when the session first read it — read a
+    * rewritten table from a new session. */
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+  }
 
   def region(spark: SparkSession, sfDir: String): DataFrame    = table(spark, sfDir, "region")
   def nation(spark: SparkSession, sfDir: String): DataFrame    = table(spark, sfDir, "nation")
@@ -66,28 +76,31 @@ object Tables {
   def eventsStream(spark: SparkSession, sfDir: String): DataFrame =
     normalizeTs(singleFileStream(spark, sfDir, "events"))
 
-  // file-source schemas memoized per (session, path): the metadata-only
-  // batch read is a parquet-footer job, and streaming paths that build
-  // several sources per run (q353's click+view pair) were paying it each
-  // time. Session scope keeps a rewritten path from serving a stale
-  // schema to a later session; entries of stopped sessions are dropped.
-  private val streamSchemaCache = scala.collection.concurrent.TrieMap
+  // parquet schemas memoized per (session, path), shared by batch and
+  // stream reads: inferring one is a footer-reading Spark job per read,
+  // paid on every query build. Session scope lets a later session see a
+  // rewritten path's new schema; entries of stopped sessions are dropped.
+  private val schemaCache = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String), org.apache.spark.sql.types.StructType]
 
+  /** The schema of the parquet file or directory at `path`, inferred on
+    * this session's first read of it and reused for every later read in
+    * the same session. */
+  private def schemaOf(spark: SparkSession, path: String): org.apache.spark.sql.types.StructType = {
+    schemaCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
+    schemaCache.getOrElseUpdate((spark, path), spark.read.parquet(path).schema)
+  }
+
   /** The single-file table `$sfDir/$name.parquet` as a file stream.
-    * File sources need an explicit schema; it comes from one
-    * metadata-only batch read of the same path. The testdata table is a
+    * File sources need an explicit schema: [[schemaOf]] the same path.
+    * The testdata table is a
     * single FILE and the file stream source only anchors its base at a
     * directory, so the file is addressed through a single-alternative
     * glob — globbed paths keep the parent as base (at scale the table
     * is simply a directory and none of this shows). */
-  private def singleFileStream(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val path = s"$sfDir/$name.parquet"
-    streamSchemaCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    val rawSchema = streamSchemaCache.getOrElseUpdate((spark, path),
-      spark.read.parquet(path).schema)
-    spark.readStream.schema(rawSchema).parquet(s"$sfDir/{$name.parquet}")
-  }
+  private def singleFileStream(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    spark.readStream.schema(schemaOf(spark, s"$sfDir/$name.parquet"))
+      .parquet(s"$sfDir/{$name.parquet}")
 
   def documents(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "documents")
   def embeddings(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "embeddings")
@@ -150,16 +163,21 @@ object Tables {
 
   /** The reference's literal source shape: a directory of .txt files read
     * as (file, content) pairs (`example/word-count-taskfile.lua:40-63`
-    * `read_source` + `taskfn` :82-88). Spark's file source enumerates and
-    * splits the listing across executors — at 100 TB the directory scan
-    * parallelizes instead of running in the server's single thread.
+    * `read_source` + `taskfn` :82-88). The directory is loaded as ONE
+    * root path with a `*.txt` file-name filter, so its top level is
+    * listed on the driver. A `*.txt` glob under the directory would
+    * expand to one root path per file, and past Spark's
+    * parallel-discovery threshold (32 paths) that listing runs as a
+    * Spark job with one task per file — more work than the word count
+    * itself on a directory of small files.
     * `wholetext` preserves the reference's one-record-per-file semantics. */
   def textDir(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     spark.read
       .format("text")
       .option("wholetext", "true")
-      .load(s"$dir/*.txt")
+      .option("pathGlobFilter", "*.txt")
+      .load(dir)
       .select(input_file_name().as("file"), col("value").as("content"))
   }
 }

@@ -698,10 +698,9 @@ object EventStream {
     * q193 multi-batch streaming paths. Returns the stream directory and
     * the schema of the frame written into it. */
   private def writeArrivalBatches(
-      tagged: DataFrame, cols: Seq[String], prefix: String,
+      tagged: DataFrame, cols: Seq[String], dir: java.io.File,
       nBatches: Int): (java.io.File, org.apache.spark.sql.types.StructType) = {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory(prefix).toFile
     val written = cols.map(col)
     (0 until nBatches).foreach { k =>
       val tmp = new java.io.File(dir, s"_tmp$k")
@@ -730,9 +729,10 @@ object EventStream {
     * all of them. The streamed EXECUTIONS still run in full every
     * call — only the batch-side file prep is shared (the production
     * analogue: arrival order is a property of the source, not of each
-    * consumer). Keyed like the index-artifact caches; entries of
-    * stopped sessions are dropped (their tmp dirs die with the OS
-    * tmpdir). */
+    * consumer). Keyed like the index-artifact caches. Each session
+    * stages under one scratch root ([[stageRoot]]) that is deleted when
+    * its SparkContext stops; entries of stopped sessions are dropped,
+    * and their roots deleted, on the next staging call. */
   // per-key lazy holder: putIfAbsent races resolve on the MAP (cheap —
   // the byname staging write stays unevaluated in the losing holder)
   // and the winner's thread-safe lazy val runs the Spark staging job
@@ -747,6 +747,24 @@ object EventStream {
   }
   private val stageCache = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String, String), StagedDir]
+  private val stageRoots = scala.collection.concurrent.TrieMap
+    .empty[SparkSession, java.io.File]
+
+  /** The session's scratch root for staged arrival dirs, made on first
+    * use with a listener that deletes it when the SparkContext stops
+    * (the staged files are as large as the events table, and the OS
+    * temp dir is not cleaned while the host runs). */
+  private def stageRoot(spark: SparkSession): java.io.File = stageRoots.synchronized {
+    stageRoots.getOrElseUpdate(spark, {
+      val root = java.nio.file.Files.createTempDirectory("graft_stage_").toFile
+      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+        override def onApplicationEnd(
+            end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
+          org.apache.hadoop.fs.FileUtil.fullyDelete(root)
+      })
+      root
+    })
+  }
 
   /** The file stream over a memoized arrival staging: one micro-batch
     * per staged batch file, in tag order. */
@@ -754,8 +772,12 @@ object EventStream {
       spark: SparkSession, sfDir: String, key: String, nBatches: Int)(
       tagged: => DataFrame, cols: Seq[String]): DataFrame = {
     stageCache.filterInPlace { case ((s, _, _), _) => !s.sparkContext.isStopped }
-    val holder = new StagedDir(
-      writeArrivalBatches(tagged, cols, s"graft_${key}_", nBatches))
+    stageRoots.filterInPlace { (s, root) =>
+      !s.sparkContext.isStopped || { org.apache.hadoop.fs.FileUtil.fullyDelete(root); false }
+    }
+    val holder = new StagedDir(writeArrivalBatches(tagged, cols,
+      java.nio.file.Files.createTempDirectory(stageRoot(spark).toPath, s"${key}_").toFile,
+      nBatches))
     val staged = stageCache.putIfAbsent((spark, sfDir, key), holder).getOrElse(holder)
     spark.readStream.schema(staged.schema)
       .option("maxFilesPerTrigger", "1")

@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.GraftSession
+import graft.sources.Tables
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -64,7 +65,7 @@ object ScaleUp {
     val tagCol = element_at(
       array(tags.map(lit): _*), col("rep") + 1)
 
-    val docs = spark.read.parquet(s"$src/documents.parquet")
+    val docs = Tables.table(spark, src, "documents")
     val dMax = docs.agg(max("doc_id")).head.getLong(0) + 1L
     val docsUp = replicas(docs)
       .withColumn("doc_id", col("doc_id") + col("rep") * dMax)
@@ -96,7 +97,7 @@ object ScaleUp {
     docsOut.select(docs.columns.map(col): _*)
       .repartition(8).write.mode("overwrite").parquet(s"$out/documents.parquet")
 
-    val emb = spark.read.parquet(s"$src/embeddings.parquet")
+    val emb = Tables.table(spark, src, "embeddings")
     val vMax = emb.agg(max("vec_id")).head.getLong(0) + 1L
     replicas(emb)
       .withColumn("vec_id", col("vec_id") + col("rep") * vMax)
@@ -106,7 +107,7 @@ object ScaleUp {
       .select(emb.columns.map(col): _*)
       .repartition(8).write.mode("overwrite").parquet(s"$out/embeddings.parquet")
 
-    val orders = spark.read.parquet(s"$src/orders.parquet")
+    val orders = Tables.table(spark, src, "orders")
     val oMax = orders.agg(max("o_orderkey")).head.getLong(0) + 1L
     val cMax = orders.agg(max("o_custkey")).head.getLong(0) + 1L
     replicas(orders)
@@ -116,7 +117,7 @@ object ScaleUp {
       .select(orders.columns.map(col): _*)
       .repartition(8).write.mode("overwrite").parquet(s"$out/orders.parquet")
 
-    val li = spark.read.parquet(s"$src/lineitem.parquet")
+    val li = Tables.table(spark, src, "lineitem")
     val pMax = li.agg(max("l_partkey")).head.getLong(0) + 1L
     val sMax = li.agg(max("l_suppkey")).head.getLong(0) + 1L
     replicas(li)

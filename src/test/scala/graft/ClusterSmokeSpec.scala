@@ -105,4 +105,16 @@ class ClusterSmokeSpec extends AnyFunSuite {
     val wr = SparkEntry.queries("q354_stream_window_rollup_exec")(spark, sf).collect()
     assert(wr.nonEmpty)
   }
+
+  // last: it stops the suite's context
+  test("staged arrival directories are deleted when the context stops (q178)") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def graftDirs(): Set[String] =
+      Option(tmp.list()).fold(Set.empty[String])(_.toSet).filter(_.startsWith("graft_"))
+    val before = graftDirs()
+    assert(SparkEntry.queries("q178_stream_late_exec")(spark, sf).collect().nonEmpty)
+    assert((graftDirs() -- before).nonEmpty, "q178 staged nothing in the temp dir")
+    spark.stop()
+    assert((graftDirs() -- before).isEmpty, "staged directories outlived the context")
+  }
 }

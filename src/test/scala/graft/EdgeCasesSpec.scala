@@ -167,6 +167,22 @@ class EdgeCasesSpec extends SparkSuite {
     assert(graft.sources.Tables.eventsStream(spark.newSession(), dir).columns.contains("tag"))
   }
 
+  test("a rewritten documents table is read with its new schema in a new session") {
+    import graft.SparkSuite.implicits._
+    import org.apache.spark.sql.functions.lit
+    val dir = Files.createTempDirectory("graft_table_schema").toString
+    val docs = Seq((0L, "a b")).toDF("doc_id", "text")
+    docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val first = spark.newSession()
+    assert(!graft.sources.Tables.documents(first, dir).columns.contains("tag"))
+    docs.withColumn("tag", lit("x"))
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    assert(graft.sources.Tables.documents(spark.newSession(), dir).columns.contains("tag"))
+    // within one session a path keeps the schema it was first read with
+    val again = graft.sources.Tables.documents(first, dir)
+    assert(!again.columns.contains("tag") && again.count() == 1L)
+  }
+
   test("a rewritten embeddings corpus is counted afresh in a new session") {
     import graft.SparkSuite.implicits._
     val dir = Files.createTempDirectory("graft_corpus_size").toString
