@@ -4,11 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // shuffle width decoupled from executor threads: at bench SF most
+    // one shuffle partition per core, as in Verify: at bench SF most
     // post-shuffle partitions are tiny, so fewer/wider shuffle tasks cut
     // pure scheduler overhead while scans still use all threads
-    val shuffle = sys.env.get("SPARK_GRAFT_SHUFFLE").map(_.trim.toInt).getOrElse(GraftSession.cpus)
-    val spark = GraftSession.builder(shufflePartitions = shuffle).getOrCreate()
+    val spark = GraftSession.builder(shufflePartitions = GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm up the session (codegen compiler, file listings) so the first
     // timed query doesn't absorb one-time init cost

@@ -57,4 +57,10 @@ object Bucketing {
         col("o_custkey") === col("c_custkey"))
       .select(col("o_orderkey"), col("o_custkey"), col("c_name"), col("o_totalprice"))
   }
+
+  /** This module's graded queries, name → build; `SparkEntry.queries`
+    * collects them. */
+  private[graft] val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "q81_bucketed_join"   -> ((s, dir) => bucketedJoin(s, dir).orderBy("o_orderkey"))
+  )
 }

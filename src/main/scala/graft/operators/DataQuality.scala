@@ -1657,4 +1657,42 @@ object DataQuality {
         lit(ConformalTargetPpm).as("target_ppm"),
         expr("cov * 1000000 div n_test").as("coverage_ppm"))
   }
+
+  /** This module's graded queries, name → build; `SparkEntry.queries`
+    * collects them. */
+  private[graft] val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "q151_data_quality"   -> (dataQuality _),
+    "q155_incremental_stats" -> (incrementalStats _),
+    "q174_robust_outliers" -> (robustOutliers _),
+    "q194_ks_drift"       -> (ksDrift _),
+    "q196_wasserstein_drift" -> (wassersteinDrift _),
+    "q213_psi_drift"      -> (psiDrift _),
+    "q249_fk_discovery"   -> (fkDiscovery _),
+    "q254_quality_length_ols" -> (qualityLengthOls _),
+    "q257_chi2_independence" -> (chi2Independence _),
+    "q259_benford"        -> (benford _),
+    "q262_spearman"       -> (spearman _),
+    "q263_calibration"    -> (calibration _),
+    "q268_bootstrap_ci"   -> (bootstrapCi _),
+    "q274_simpson"        -> (simpson _),
+    "q277_cohen_kappa"    -> (cohenKappa _),
+    "q278_join_estimate_audit" -> (joinEstimateAudit _),
+    "q280_mutual_info"    -> (mutualInfo _),
+    "q290_permutation_test" -> (permutationTest _),
+    "q294_mann_whitney"   -> (mannWhitney _),
+    "q297_anova_f"        -> (anovaF _),
+    "q298_kruskal_wallis" -> (kruskalWallis _),
+    "q299_jarque_bera"    -> (jarqueBera _),
+    "q300_brown_forsythe" -> (brownForsythe _),
+    "q304_fd_discovery"   -> (fdDiscovery _),
+    "q306_logreg"         -> (logReg _),
+    "q308_decision_stump" -> (decisionStump _),
+    "q322_l_moments"      -> (lMoments _),
+    "q326_k_anonymity"    -> (kAnonymity _),
+    "q330_weekday_anova"  -> (weekdayAnova _),
+    "q333_friedman"       -> (friedman _),
+    "q340_neg_binomial"   -> (negBinomial _),
+    "q341_chao1"          -> (chao1 _),
+    "q350_conformal_interval" -> (conformalInterval _)
+  )
 }

@@ -115,13 +115,6 @@ object Dedup {
       .agg(org.apache.spark.sql.graft.native.minhashSignature(col("h"), NumHashes).as("sig"))
   }
 
-  /** Column-per-hash view of [[minhashSignaturesArr]] (m0..m127) — kept
-    * for spec parity checks against the k-column min formulation. */
-  private[graft] def minhashSignatures(spark: SparkSession, sfDir: String): DataFrame =
-    minhashSignaturesArr(spark, sfDir)
-      .select(col("doc_id") +:
-        (0 until NumHashes).map(i => element_at(col("sig"), i + 1).as(s"m$i")): _*)
-
   /** Candidate pairs from banded LSH bucketing (doc_a < doc_b).
     * Candidate generation goes through [[CandidatePairs.boundedSelfJoin]]:
     * buckets over `cap` members (boilerplate shingles surviving into a
@@ -599,7 +592,7 @@ object Dedup {
     * (a ≥0.8 pair missed by all 32 bands would label `new` here while
     * the exact-Jaccard oracle says `near`) — the documented ~5e-8
     * per-pair false-negative rate, see the recall assumption at
-    * SparkEntry.jaccardCte. */
+    * the DuckDB oracle's jaccardCte. */
   def incrementalDedup(spark: SparkSession, sfDir: String): DataFrame =
     incrementalDedupFrom(
       Tables.documents(spark, sfDir), verifiedPairs(spark, sfDir))
@@ -1597,4 +1590,34 @@ object Dedup {
       .agg(max(col("k")).cast("long").as("overlap_tokens"))
       .orderBy("doc_a", "doc_b")
   }
+
+  /** This module's graded queries, name → build; `SparkEntry.queries`
+    * collects them. */
+  private[graft] val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "q11_dedup_exact"     -> (exactDedup _),
+    "q12_dedup_minhash"   -> (minhashPairs _),
+    "q13_dedup_simhash"   -> (simhashPairs _),
+    "q14_ngram_dedup"     -> (ngramDedup _),
+    "q31_dup_clusters"    -> (dupClusters _),
+    "q51_decontaminate"   -> (decontaminate _),
+    "q58_winnow_pairs"    -> (winnowPairs _),
+    "q59_passage_dedup"   -> (passageDedup _),
+    "q63_incremental_dedup" -> (incrementalDedup _),
+    "q108_minhash_error"  -> (minhashError _),
+    "q118_bloom_decontam" -> (bloomDecontam _),
+    "q135_fuzzy_names"    -> (fuzzyNames _),
+    "q165_dedup_sensitivity" -> (dedupSensitivity _),
+    "q176_golden_record"  -> (goldenRecords _),
+    "q181_containment_dedup" -> (containmentDedup _),
+    "q190_simhash_search" -> (simhashSearch _),
+    "q198_band_planner"   -> (bandPlanner _),
+    "q211_bbit_minhash"   -> (bbitMinhash _),
+    "q226_pair_evidence"  -> (pairEvidence _),
+    "q238_detector_venn"  -> (detectorVenn _),
+    "q276_split_leakage"  -> (splitLeakage _),
+    "q279_minhash_roc"    -> (minhashRoc _),
+    "q335_snm_blocking"   -> (snmBlocking _),
+    "q347_boundary_splice" -> (boundarySplice _),
+    "q358_string_similarity" -> (stringSimilarity _)
+  )
 }

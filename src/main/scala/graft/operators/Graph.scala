@@ -1013,4 +1013,27 @@ object Graph {
       .orderBy(col("n_nodes").desc, col("community"))
       .limit(30)
   }
+
+  /** This module's graded queries, name → build; `SparkEntry.queries`
+    * collects them. */
+  private[graft] val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "q76_pagerank"        -> (pageRank _),
+    "q104_dup_triangles"  -> (dupTriangles _),
+    "q126_cooccurrence"   -> (cooccurrence _),
+    "q133_dup_degrees"    -> (dupDegrees _),
+    "q179_item_neighbors" -> (itemNeighbors _),
+    "q187_bfs_hops"       -> (bfsHops _),
+    "q223_cold_start"     -> (coldStartRecs _),
+    "q224_modularity"     -> (modularity _),
+    "q225_assortativity"  -> (assortativity _),
+    "q231_kcore"          -> (kcore _),
+    "q241_cf_eval"        -> (cfEval _),
+    "q248_link_prediction" -> (linkPrediction _),
+    "q252_association_rules" -> (associationRules _),
+    "q269_hits"           -> (hits _),
+    "q270_label_propagation" -> (labelPropagation _),
+    "q305_textrank"       -> (textRank _),
+    "q312_wl_hash"        -> (wlHash _),
+    "q313_local_clustering" -> (localClustering _)
+  )
 }

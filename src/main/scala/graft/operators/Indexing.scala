@@ -792,4 +792,22 @@ object Indexing {
         (col("query_id") === col("doc_id")).as("is_self"))
       .orderBy("query_id", "doc_id")
   }
+
+  /** This module's graded queries, name → build; `SparkEntry.queries`
+    * collects them. */
+  private[graft] val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "q72_inverted_index"  -> (invertedIndex _),
+    "q75_bm25"            -> (bm25 _),
+    "q96_phrase_search"   -> (phraseSearch _),
+    "q121_rrf_fusion"     -> (rrfFusion _),
+    "q171_sparse_cosine"  -> (sparseCosine _),
+    "q206_context_pack"   -> (contextPack _),
+    "q207_autocomplete"   -> (autocomplete _),
+    "q215_kwic_snippets"  -> (kwicSnippets _),
+    "q244_bm25_eval"      -> (bm25Eval _),
+    "q251_postings_compression" -> (postingsCompression _),
+    "q271_substring_index" -> (substringIndex _),
+    "q289_rbo"            -> (rbo _),
+    "q324_bm25_grid"      -> (bm25Grid _)
+  )
 }

@@ -92,4 +92,12 @@ object Interchange {
         min(col("doc_id")).as("min_doc"), max(col("doc_id")).as("max_doc"))
       .orderBy("lang")
   }
+
+  /** This module's graded queries, name → build; `SparkEntry.queries`
+    * collects them. */
+  private[graft] val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "q164_json_roundtrip_agg" -> (jsonRoundtripAgg _),
+    "q239_csv_roundtrip_agg" -> (csvRoundtripAgg _),
+    "q243_orc_roundtrip_agg" -> (orcRoundtripAgg _)
+  )
 }

@@ -225,4 +225,13 @@ object Layout {
         "compressed_bytes")
       .orderBy("table_name")
   }
+
+  /** This module's graded queries, name → build; `SparkEntry.queries`
+    * collects them. */
+  private[graft] val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "q103_zorder_layout"  -> (zorderLayout _),
+    "q172_shuffle_manifest" -> (shuffleManifest _),
+    "q189_file_advisor"   -> (fileAdvisor _),
+    "q291_parquet_footprint" -> (parquetFootprint _)
+  )
 }

@@ -609,4 +609,13 @@ object Multimodal {
     }.toDF("doc_id", "n_samples", "peak_dev", "energy", "zero_cross")
       .orderBy("doc_id")
   }
+
+  /** This module's graded queries, name → build; `SparkEntry.queries`
+    * collects them. */
+  private[graft] val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "q22_multimodal"      -> (features _),
+    "q180_image_dedup"    -> (imageDedup _),
+    "q232_audio_codec"    -> (audioCodec _),
+    "q356_video_frames" -> (videoFrames _)
+  )
 }

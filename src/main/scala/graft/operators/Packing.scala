@@ -245,4 +245,13 @@ object Packing {
           .as("contaminated_ppm"))
       .orderBy("w")
   }
+
+  /** This module's graded queries, name → build; `SparkEntry.queries`
+    * collects them. */
+  private[graft] val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "q53_shard_pack"      -> (shardPack _),
+    "q219_pad_waste"      -> (padWaste _),
+    "q361_bucket_sweep"   -> (bucketSweep _),
+    "q365_pack_mask_stats" -> (packMaskStats _)
+  )
 }

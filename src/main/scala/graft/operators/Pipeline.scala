@@ -494,4 +494,22 @@ object Pipeline {
       .agg(count(lit(1)).as("n_pairs"), sum(col("t")).as("coherence_nano"))
       .orderBy("cent_id")
   }
+
+  /** This module's graded queries, name → build; `SparkEntry.queries`
+    * collects them. */
+  private[graft] val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "q33_pipeline"        -> (curate _),
+    "q47_cluster_reps"    -> (clusterReps _),
+    "q52_curation_chain"  -> (curationChain _),
+    "q80_dedup_report"    -> (dedupReport _),
+    "q91_cluster_keywords" -> (clusterKeywords _),
+    "q95_cell_drift"      -> (cellDrift _),
+    "q100_corpus_overlap" -> (corpusOverlap _),
+    "q112_dup_savings"    -> (dupSavings _),
+    "q131_mix_card"       -> (mixCard _),
+    "q184_cross_source_dup" -> (crossSourceDup _),
+    "q185_dup_weights"    -> (dupWeights _),
+    "q209_dup_quality_lift" -> (dupQualityLift _),
+    "q256_topic_coherence" -> (topicCoherence _)
+  )
 }

@@ -152,4 +152,11 @@ object Ranking {
         (col("pct") > KeepPctAbove).cast("int").as("keep_top"))
       .orderBy("doc_id")
   }
+
+  /** This module's graded queries, name → build; `SparkEntry.queries`
+    * collects them. */
+  private[graft] val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "q61_length_deciles"  -> (lengthDeciles _),
+    "q111_quality_percentile" -> (qualityPercentile _)
+  )
 }

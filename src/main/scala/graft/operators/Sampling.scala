@@ -371,4 +371,19 @@ object Sampling {
         expr("alloc_tokens * 1000000 div n_tokens").as("epochs_ppm"))
       .orderBy("lang")
   }
+
+  /** This module's graded queries, name → build; `SparkEntry.queries`
+    * collects them. */
+  private[graft] val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "q48_sample"          -> (stratifiedSample _),
+    "q60_lang_balance"    -> (langBalance _),
+    "q69_domain_cap"      -> (domainCap _),
+    "q71_temp_mix"        -> (tempMix _),
+    "q86_cluster_balance" -> (clusterBalance _),
+    "q99_split_assign"    -> (splitAssign _),
+    "q119_priority_sample" -> (prioritySample _),
+    "q138_stratified_n"   -> (stratifiedN _),
+    "q192_epoch_mix"      -> (epochMix _),
+    "q345_neyman"         -> (neymanAllocation _)
+  )
 }

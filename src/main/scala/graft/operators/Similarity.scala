@@ -2622,4 +2622,51 @@ object Similarity {
       .select(col("vec_id"), col("eval_id"), round(col("c"), 6).as("cosine"))
       .orderBy("vec_id")
   }
+
+  /** This module's graded queries, name → build; `SparkEntry.queries`
+    * collects them. */
+  private[graft] val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "q15_embed_neardup"   -> (embedNeardup _),
+    "q16_ann_bruteforce"  -> (annBruteForce _),
+    "q17_ann_lsh"         -> (annLsh _),
+    "q28_ann_ivf"         -> (annIvf _),
+    "q57_ann_ivf_hier"    -> (annIvfHier _),
+    "q62_ann_hnsw"        -> (annHnsw _),
+    "q66_embed_outliers"  -> (embedOutliers _),
+    "q68_ann_pq"          -> (annPq _),
+    "q73_semdedup"        -> (semDedup _),
+    "q82_ann_ivfpq"       -> (annIvfPq _),
+    "q83_ann_ivf_graph"   -> (annIvfGraph _),
+    "q84_ann_sq8"         -> (annSq _),
+    "q85_ann_ivf_sq8"     -> (annIvfSq _),
+    "q87_ann_incremental" -> (annIncremental _),
+    "q89_hard_negatives"  -> (hardNegatives _),
+    "q92_knn_label"       -> (knnLabel _),
+    "q93_mmr_rerank"      -> (mmrRerank _),
+    "q109_ivf_recall"     -> (ivfRecall _),
+    "q122_ann_ndcg"       -> (annNdcg _),
+    "q127_cluster_inertia" -> (clusterInertia _),
+    "q130_centroid_label" -> (centroidLabel _),
+    "q147_silhouette"     -> (silhouette _),
+    "q149_embed_isotropy" -> (embedIsotropy _),
+    "q154_embed_variance" -> (embedVariance _),
+    "q161_cell_purity"    -> (cellPurity _),
+    "q166_lsh_bucket_stats" -> (lshBucketStats _),
+    "q170_ann_filtered"   -> (filteredSearch _),
+    "q177_pca_power"      -> (pcaPower _),
+    "q183_mutual_knn"     -> (mutualKnn _),
+    "q186_random_projection" -> (randomProjection _),
+    "q200_hubness"        -> (hubness _),
+    "q201_dim_clip"       -> (dimClip _),
+    "q212_embed_norms"    -> (embedNorms _),
+    "q227_search_explain" -> (searchExplain _),
+    "q233_mrl_truncate"   -> (mrlTruncate _),
+    "q281_cluster_nmi"    -> (clusterNmi _),
+    "q285_abtt"           -> (abtt _),
+    "q314_lof"            -> (lofOutliers _),
+    "q315_probe_curve"    -> (probeCurve _),
+    "q346_semantic_decontam" -> (semanticDecontam _),
+    "q362_kcenter_seeds"  -> (kcenterSeeds _),
+    "q363_cluster_validity" -> (clusterValidity _)
+  )
 }

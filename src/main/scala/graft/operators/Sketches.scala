@@ -396,4 +396,15 @@ object Sketches {
         round4((col("ea") + col("eb") - col("eu") - col("n_inter_exact").cast("double"))
           / col("n_inter_exact").cast("double")).as("inter_rel_error"))
   }
+
+  /** This module's graded queries, name → build; `SparkEntry.queries`
+    * collects them. */
+  private[graft] val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "q115_hll_distinct"   -> (hllDistinct _),
+    "q116_heavy_hitters"  -> (heavyHitters _),
+    "q169_hll_merge"      -> (hllMerge _),
+    "q173_quantile_merge" -> (quantileMerge _),
+    "q337_hll_sweep"      -> (hllSweep _),
+    "q355_hll_set_ops" -> (hllSetOps _)
+  )
 }

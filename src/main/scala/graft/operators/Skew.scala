@@ -99,4 +99,11 @@ object Skew {
         expr("n_rows * 1000000 div hot_total").as("share_ppm"))
       .orderBy("salt")
   }
+
+  /** This module's graded queries, name → build; `SparkEntry.queries`
+    * collects them. */
+  private[graft] val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "q24_salted_agg"      -> (saltedAggQuery _),
+    "q253_salt_evenness"  -> (saltEvenness _)
+  )
 }

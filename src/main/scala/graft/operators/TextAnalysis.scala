@@ -2422,4 +2422,61 @@ object TextAnalysis {
         expr("n_shared * 1000000 div n_grams_a"))
       .orderBy("src_a", "src_b")
   }
+
+  /** This module's graded queries, name → build; `SparkEntry.queries`
+    * collects them. */
+  private[graft] val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "q18_langid"          -> (langId _),
+    "q19_quality"         -> (quality _),
+    "q20_tokencount"      -> (tokenCount _),
+    "q21_fingerprint"     -> (fingerprint _),
+    "q32_normalize"       -> (normalize _),
+    "q34_tfidf"           -> (tfidf _),
+    "q35_bigrams"         -> (bigrams _),
+    "q49_langstats"       -> (langStats _),
+    "q50_pmi"             -> (pmi _),
+    "q54_repetition"      -> (repetition _),
+    "q56_scrub"           -> (scrub _),
+    "q65_char_langid"     -> (charLangId _),
+    "q70_vocab_oov"       -> (vocabOov _),
+    "q79_lm_score"        -> (lmScore _),
+    "q90_chunk_passages"  -> (chunkPassages _),
+    "q97_bpe_merges"      -> (bpeMerges _),
+    "q98_ngram_novelty"   -> (ngramNovelty _),
+    "q102_bpe_train"      -> (bpeTrain _),
+    "q107_bpe_encode"     -> (bpeEncode _),
+    "q114_lang_confusion" -> (langConfusion _),
+    "q140_ngram_diversity" -> (ngramDiversity _),
+    "q148_vocab_growth"   -> (vocabGrowth _),
+    "q150_zipf_slope"     -> (zipfSlope _),
+    "q152_source_drift"   -> (sourceDrift _),
+    "q153_vocab_coverage" -> (vocabCoverage _),
+    "q162_length_moments" -> (lengthMoments _),
+    "q175_length_n50"     -> (lengthN50 _),
+    "q197_vocab_churn"    -> (vocabChurn _),
+    "q210_hill_tail"      -> (hillTail _),
+    "q228_next_token"     -> (nextToken _),
+    "q234_backoff_lm"     -> (backoffLm _),
+    "q250_neg_sampling"   -> (negSampling _),
+    "q261_readability"    -> (readability _),
+    "q272_char_entropy"   -> (charEntropy _),
+    "q273_burrows_delta"  -> (burrowsDelta _),
+    "q286_boilerplate"    -> (boilerplate _),
+    "q295_llr_bigrams"    -> (llrBigrams _),
+    "q296_jsd_sources"    -> (jsdSources _),
+    "q302_naive_bayes"    -> (naiveBayes _),
+    "q303_cond_entropy"   -> (condEntropy _),
+    "q316_yules_k"        -> (yulesK _),
+    "q317_term_burstiness" -> (termBurstiness _),
+    "q319_feature_hashing" -> (featureHashing _),
+    "q320_good_turing"    -> (goodTuring _),
+    "q325_pr_curve"       -> (prCurve _),
+    "q332_count_min"      -> (countMin _),
+    "q336_source_cosine"  -> (sourceCosine _),
+    "q344_mcc"            -> (mcc _),
+    "q352_lm_generalization_gap" -> (lmGeneralizationGap _),
+    "q359_moving_ttr"     -> (movingTtr _),
+    "q360_lm_transfer"    -> (lmTransfer _),
+    "q364_source_gram_leakage" -> (sourceGramLeakage _)
+  )
 }

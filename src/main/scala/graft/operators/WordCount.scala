@@ -54,4 +54,10 @@ object WordCount {
       _ + _
     )
   }
+
+  /** This module's graded queries, name → build; `SparkEntry.queries`
+    * collects them. */
+  private[graft] val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "q01_wordcount"       -> (query _)
+  )
 }

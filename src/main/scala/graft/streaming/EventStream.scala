@@ -1176,4 +1176,32 @@ object EventStream {
         .select(date_format(col("win.start"), "yyyy-MM-dd HH:mm:ss").as("day"),
           col("n_users")))(
       _.orderBy("day"))
+
+  /** This module's graded queries, name → build; `SparkEntry.queries`
+    * collects them. */
+  private[graft] val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "q23_stream_window"   -> (windowQuery _),
+    "q25_sessionize"      -> (sessionizeBatchQuery _),
+    "q67_session_attribution" -> (sessionAttribution _),
+    "q88_stream_window_exec" -> (windowQueryStreamed _),
+    "q94_stream_session_exec" -> (sessionizeStreamed _),
+    "q106_stream_dedup_exec" -> (dedupStreamed _),
+    "q110_stream_userstats_exec" -> (userStatsStreamed _),
+    "q113_stream_join_exec" -> (clickAttributionStreamed _),
+    "q163_stream_ratelimit_exec" -> (rateLimitStreamed _),
+    "q168_stream_static_exec" -> (streamStaticDedupExec _),
+    "q178_stream_late_exec" -> (lateDataStreamed _),
+    "q182_sliding_window" -> (hoppingWindowQuery _),
+    "q193_stream_update_exec" -> (userStatsUpdateStreamed _),
+    "q205_stream_complete_exec" -> (typeCountsCompleteStreamed _),
+    "q229_window_distinct" -> (hoppingDistinctUsers _),
+    "q237_stream_outer_join_exec" -> (clickAttributionOuterStreamed _),
+    "q255_session_durations" -> (sessionDurations _),
+    "q267_max_concurrency" -> (maxConcurrency _),
+    "q275_stream_full_outer_join_exec" -> (clickAttributionFullOuterStreamed _),
+    "q349_stream_chained_exec" -> (dailyUniquesChainedStreamed _),
+    "q353_stream_join_agg_exec" -> (attributionRateStreamed _),
+    "q354_stream_window_rollup_exec" -> (windowRollupStreamed _),
+    "q357_stream_tws_exec" -> (userStatsTwsStreamed _)
+  )
 }

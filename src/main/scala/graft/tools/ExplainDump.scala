@@ -9,9 +9,7 @@ object ExplainDump {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val df =
-      if (name == "_minhash_sigs") graft.operators.Dedup.minhashSignatures(spark, sfDir)
-      else graft.SparkEntry.queries(name)(spark, sfDir)
+    val df = graft.SparkEntry.queries(name)(spark, sfDir)
     println(s"==== $name ====")
     println(df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
     spark.stop()

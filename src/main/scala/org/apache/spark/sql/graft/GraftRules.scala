@@ -33,8 +33,10 @@ object NormalizeIdempotence extends Rule[LogicalPlan] {
       case StripAccents(inner @ StripAccents(_)) => inner
       case StripAccents(NfcNormalize(inner)) =>
         // strip_accents NFD-decomposes its input itself, and
-        // NFD(NFC(x)) = NFD(x) — the inner nfc is dead work (this one
-        // fires on the engine's own nfc→strip_accents dedup keys)
+        // NFD(NFC(x)) = NFD(x) — the inner nfc is dead work. q11's
+        // dedup key has this shape, but no engine session installs the
+        // rule (GraftSession adds no extensions; only tests call
+        // GraftRules.ensure), so q11 still pays the nfc pass
         StripAccents(inner)
     }
 }

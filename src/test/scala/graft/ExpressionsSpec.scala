@@ -100,7 +100,8 @@ class ExpressionsSpec extends SparkSuite {
     val viaAgg = exploded.groupBy("doc_id")
       .agg(native.minhashSignature(col("h"), operators.Dedup.NumHashes).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toVector).toMap
-    val viaCols = operators.Dedup.minhashSignatures(spark, sf)
+    val mins = (0 until operators.Dedup.NumHashes).map(i => min(H.affine(col("h"), i)))
+    val viaCols = exploded.groupBy("doc_id").agg(mins.head, mins.tail: _*)
       .collect().map { r =>
         r.getLong(0) -> (0 until operators.Dedup.NumHashes).map(i => r.getLong(i + 1)).toVector
       }.toMap

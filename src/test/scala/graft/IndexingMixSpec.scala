@@ -66,10 +66,9 @@ class IndexingMixSpec extends SparkSuite {
 
   /** Runs the q70 pipeline over an injected frame via a temp view swap. */
   private def vocabOovFrom(docs: org.apache.spark.sql.DataFrame)
-      : Map[Long, (Long, Long, Long)] = {
-    val dir = java.nio.file.Files.createTempDirectory("vocaboov").toString
+      : Map[Long, (Long, Long, Long)] = withTempDir("vocaboov") { dir =>
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    TextAnalysis.vocabOov(spark, dir)
+    TextAnalysis.vocabOov(spark, dir.toString)
       .select($"doc_id", $"n_tokens", $"n_oov", $"oov_permille")
       .as[(Long, Long, Long, Long)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap

@@ -22,12 +22,14 @@ class MapReduceSpec extends SparkSuite {
 
   test("nested case-class serialization round-trips through parquet") {
     import graft.SparkSuite.implicits._
-    val in = Seq(
-      Outer(1, "a", Inner(Seq("x", "y"), 1.5), Map("k" -> 2L)),
-      Outer(2, "b", Inner(Nil, -0.5), Map.empty))
-    val dir = java.nio.file.Files.createTempDirectory("graft_ser").toString + "/t"
-    in.toDS().write.mode("overwrite").parquet(dir)
-    val out = spark.read.parquet(dir).as[Outer].collect().toSeq.sortBy(_.id)
-    assert(out == in)
+    withTempDir("graft_ser") { root =>
+      val dir = s"$root/t"
+      val in = Seq(
+        Outer(1, "a", Inner(Seq("x", "y"), 1.5), Map("k" -> 2L)),
+        Outer(2, "b", Inner(Nil, -0.5), Map.empty))
+      in.toDS().write.mode("overwrite").parquet(dir)
+      val out = spark.read.parquet(dir).as[Outer].collect().toSeq.sortBy(_.id)
+      assert(out == in)
+    }
   }
 }

@@ -105,6 +105,15 @@ class QueriesSpec extends SparkSuite {
     assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet)
   }
 
+  test("the registry rejects a query name declared by two modules, naming it") {
+    val q: SparkEntry.Query = (s, d) => graft.sources.Tables.events(s, d)
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.registry(Seq(Seq("q_a" -> q, "q_shared" -> q), Seq("q_shared" -> q)))
+    }
+    assert(e.getMessage.contains("q_shared"))
+    assert(SparkEntry.registry(Seq(Seq("q_a" -> q), Seq("q_b" -> q))).keySet == Set("q_a", "q_b"))
+  }
+
   test("every allowUnpartitionedWindow entry names a registered query") {
     // a misspelled or renamed entry would exempt nothing and skip its
     // staleness check

@@ -199,10 +199,11 @@ class Round13OpsSpec extends SparkSuite {
     // escaping contract: commas and quotes survive the writer/reader pair
     import graft.SparkSuite.implicits._
     val torture = Seq((1L, """a,b "quoted" c"""), (2L, "plain")).toDF("id", "s")
-    val dir = java.nio.file.Files.createTempDirectory("graft_csvt_").toString
-    graft.sources.Sinks.csv(torture, dir)
-    val back = graft.sources.Tables.csv(spark, dir, Some(torture.schema))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    val back = withTempDir("graft_csvt_") { tmp =>
+      graft.sources.Sinks.csv(torture, tmp.toString)
+      graft.sources.Tables.csv(spark, tmp.toString, Some(torture.schema))
+        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    }
     assert(back(1L) == """a,b "quoted" c""" && back(2L) == "plain",
       "hostile content round-trips byte-exact")
   }

@@ -24,6 +24,13 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSuite extends AnyFunSuite {
   def spark: SparkSession = SparkSuite.session()
   val sf = "/root/testdata/sf0.001"
+
+  /** Loans `f` a fresh directory under the OS temp dir and deletes it,
+    * with everything in it, when `f` returns or throws. */
+  def withTempDir[T](prefix: String)(f: java.nio.file.Path => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try f(dir) finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
 }
 
 object SparkSuite {

@@ -51,20 +51,22 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("file-source streaming matches batch over a parquet directory") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
-    val events = graft.sources.Tables.events(spark, sf)
-    events.write.mode("overwrite").parquet(dir)
-    val stream = spark.readStream.schema(events.schema).parquet(dir)
-    val query = EventStream.windowedAgg(stream)
-      .writeStream.outputMode(OutputMode.Complete())
-      .format("memory").queryName("file_stream_out").start()
-    try {
-      query.processAllAvailable()
-      val streamed = spark.table("file_stream_out").collect().toSet
-      val batch = EventStream.windowedAgg(events).collect().toSet
-      assert(streamed == batch)
-      assert(streamed.nonEmpty)
-    } finally query.stop()
+    withTempDir("graft_stream") { tmp =>
+      val dir = tmp.toString
+      val events = graft.sources.Tables.events(spark, sf)
+      events.write.mode("overwrite").parquet(dir)
+      val stream = spark.readStream.schema(events.schema).parquet(dir)
+      val query = EventStream.windowedAgg(stream)
+        .writeStream.outputMode(OutputMode.Complete())
+        .format("memory").queryName("file_stream_out").start()
+      try {
+        query.processAllAvailable()
+        val streamed = spark.table("file_stream_out").collect().toSet
+        val batch = EventStream.windowedAgg(events).collect().toSet
+        assert(streamed == batch)
+        assert(streamed.nonEmpty)
+      } finally query.stop()
+    }
   }
 
   test("event-time sessionization closes sessions after the gap") {

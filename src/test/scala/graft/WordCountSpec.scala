@@ -25,19 +25,20 @@ class WordCountSpec extends SparkSuite {
 
   test("directory-of-txt-files source reproduces the reference flagship") {
     import graft.SparkSuite.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_txt")
-    java.nio.file.Files.writeString(dir.resolve("a.txt"), "Hello world hello\nSpark counts Words")
-    java.nio.file.Files.writeString(dir.resolve("b.txt"), "world of spark 42 spark!")
-    java.nio.file.Files.writeString(dir.resolve("ignored.dat"), "should not be read")
-    // the reference enumerates the top level only
-    // (word-count-taskfile.lua:40-63): a nested file is not a task
-    java.nio.file.Files.createDirectory(dir.resolve("sub"))
-    java.nio.file.Files.writeString(dir.resolve("sub").resolve("c.txt"), "nested subdirectory spark")
-    val got = WordCount.fromTextDir(spark, dir.toString)
-      .as[(String, Long)].collect().toMap
-    assert(got == Map(
-      "hello" -> 2L, "world" -> 2L, "spark" -> 3L,
-      "counts" -> 1L, "words" -> 1L, "of" -> 1L))
+    withTempDir("graft_txt") { dir =>
+      java.nio.file.Files.writeString(dir.resolve("a.txt"), "Hello world hello\nSpark counts Words")
+      java.nio.file.Files.writeString(dir.resolve("b.txt"), "world of spark 42 spark!")
+      java.nio.file.Files.writeString(dir.resolve("ignored.dat"), "should not be read")
+      // the reference enumerates the top level only
+      // (word-count-taskfile.lua:40-63): a nested file is not a task
+      java.nio.file.Files.createDirectory(dir.resolve("sub"))
+      java.nio.file.Files.writeString(dir.resolve("sub").resolve("c.txt"), "nested subdirectory spark")
+      val got = WordCount.fromTextDir(spark, dir.toString)
+        .as[(String, Long)].collect().toMap
+      assert(got == Map(
+        "hello" -> 2L, "world" -> 2L, "spark" -> 3L,
+        "counts" -> 1L, "words" -> 1L, "of" -> 1L))
+    }
   }
 
   /** Jobs started while `body` runs. Listener events arrive in order,
@@ -66,19 +67,22 @@ class WordCountSpec extends SparkSuite {
   }
 
   test("building the word count over a directory of 40 .txt files starts no Spark job") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_txt40")
-    (0 until 40).foreach(i => java.nio.file.Files.writeString(dir.resolve(s"f$i.txt"), s"spark w$i"))
-    // a per-file glob of 40 root paths is past Spark's parallel-listing
-    // threshold (32), which lists them with a Spark job
-    assert(jobsStartedBy(WordCount.fromTextDir(spark, dir.toString)) == 0)
+    withTempDir("graft_txt40") { dir =>
+      (0 until 40).foreach(i => java.nio.file.Files.writeString(dir.resolve(s"f$i.txt"), s"spark w$i"))
+      // a per-file glob of 40 root paths is past Spark's parallel-listing
+      // threshold (32), which lists them with a Spark job
+      assert(jobsStartedBy(WordCount.fromTextDir(spark, dir.toString)) == 0)
+    }
   }
 
   test("a second read of a parquet table in one session starts no Spark job") {
     import graft.SparkSuite.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_table_reread").toString
-    Seq((0L, "a b")).toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
-    graft.sources.Tables.documents(spark, dir)
-    assert(jobsStartedBy(graft.sources.Tables.documents(spark, dir)) == 0)
+    withTempDir("graft_table_reread") { tmp =>
+      val dir = tmp.toString
+      Seq((0L, "a b")).toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+      graft.sources.Tables.documents(spark, dir)
+      assert(jobsStartedBy(graft.sources.Tables.documents(spark, dir)) == 0)
+    }
   }
 
   test("total word count equals sum of per-word counts") {
