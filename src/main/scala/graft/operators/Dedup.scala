@@ -54,14 +54,16 @@ object Dedup {
 
   /** q11_dedup_exact — exact dedup of documents by content hash; the
     * survivor of each identical-content group is the min doc_id. The
-    * hash key is NFC-normalized and accent-folded first (native
-    * expressions, mirroring DuckDB `strip_accents(nfc_normalize(..))`)
-    * so encoding variants of identical text — composed vs decomposed
-    * "café" — land in the same duplicate group. */
+    * hash key is accent-folded first (native expression, equal to
+    * DuckDB `strip_accents(nfc_normalize(..))`: strip_accents
+    * NFD-decomposes its input itself and NFD(NFC(x)) = NFD(x), so an
+    * NFC pass in front of it would be dead work) so encoding variants
+    * of identical text — composed vs decomposed "café" — land in the
+    * same duplicate group. */
   def exactDedup(spark: SparkSession, sfDir: String): DataFrame =
     Tables.documents(spark, sfDir)
-      .groupBy(md5(org.apache.spark.sql.graft.native.stripAccents(
-        org.apache.spark.sql.graft.native.nfc(col("text")))).as("content_hash"))
+      .groupBy(md5(org.apache.spark.sql.graft.native.stripAccents(col("text")))
+        .as("content_hash"))
       .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n_copies"))
       .select(col("doc_id"), col("content_hash"), col("n_copies"))
       .orderBy("doc_id")
@@ -195,6 +197,24 @@ object Dedup {
   def verifiedContainmentPairs(spark: SparkSession, sfDir: String): DataFrame =
     graft.sources.IndexStore.memo(containmentPairsCache, spark, sfDir, ContainmentPairsArtifact) {
       containmentDedup(spark, sfDir).localCheckpoint()
+    }
+
+  /** Session-scoped MATERIALIZED transitive cluster labels — the
+    * artifact derived from [[verifiedPairs]]: (doc_id, cluster_id) for
+    * every document, UNORDERED. The connected-components loop is a
+    * chain of eager checkpoint, signature and probe jobs; consumers of
+    * the labels (q47, q52, q80, q112, q131, q185, q209, q224) read this
+    * one frame instead of re-running it per query. q31 itself stays the
+    * raw [[dupClusters]] pipeline so its bench number still prices the
+    * build. Lock order: [[clusterCache]] is taken before [[pairCache]]
+    * (the build resolves the pair artifact), never the other way. */
+  private[graft] val clusterCache =
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  val ClustersArtifact = "dup_clusters"
+  def clusterLabels(spark: SparkSession, sfDir: String): DataFrame =
+    graft.sources.IndexStore.memo(clusterCache, spark, sfDir, ClustersArtifact) {
+      dupClustersFrom(Tables.documents(spark, sfDir), verifiedPairs(spark, sfDir))
+        .localCheckpoint()
     }
 
   /** [[minhashPairs]] with an explicit per-bucket cap + telemetry hook
@@ -373,15 +393,17 @@ object Dedup {
     * on — pairs alone miss transitive chains (a~b, b~c ⇒ {a,b,c}).
     * Components come from [[connectedComponents]] (large-star/
     * small-star, O(log n) rounds); docs with no near-dup partner fall
-    * through the left join and label themselves. */
+    * through the left join and label themselves. q31 reruns the loop
+    * on every call, so its timing prices the build; the consumers of
+    * the labels read the memoized [[clusterLabels]] artifact. */
   def dupClusters(spark: SparkSession, sfDir: String): DataFrame =
     dupClustersFrom(
       Tables.documents(spark, sfDir), verifiedPairs(spark, sfDir))
       .orderBy("doc_id")
 
   /** Transitive cluster labels from a PRECOMPUTED verified pair frame
-    * (cols doc_a, doc_b) — the reuse twin of [[dupClusters]] for
-    * curation runs that materialized the q12 pair set once. */
+    * (cols doc_a, doc_b), unordered — what [[dupClusters]]
+    * and the [[clusterLabels]] artifact both compute. */
   def dupClustersFrom(docs: DataFrame, pairs: DataFrame): DataFrame = {
     val (labels, _) = connectedComponents(
       pairs.select(col("doc_a").as("u"), col("doc_b").as("v")))

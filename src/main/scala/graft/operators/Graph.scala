@@ -577,7 +577,7 @@ object Graph {
   def modularity(spark: SparkSession, sfDir: String): DataFrame = {
     val pairs = Dedup.verifiedPairs(spark, sfDir)
       .select(col("doc_a"), col("doc_b"))
-    val clus = Dedup.dupClusters(spark, sfDir)
+    val clus = Dedup.clusterLabels(spark, sfDir)
     val edgesC = pairs
       .join(clus.select(col("doc_id").as("doc_a"), col("cluster_id").as("ca")), "doc_a")
       .join(clus.select(col("doc_id").as("doc_b"), col("cluster_id").as("cb")), "doc_b")

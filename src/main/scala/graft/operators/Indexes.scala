@@ -5,15 +5,17 @@ import org.apache.spark.sql.SparkSession
 
 /** Cross-session index lifecycle over the session artifacts — the
   * trained IVF codebook, the hierarchical cell assignment, the SQ8
-  * stats, the BPE merge table, the capped basket table, and the three
+  * stats, the BPE merge table, the capped basket table, the three
   * near-dup detector pair sets (minhash-verified, simhash,
-  * containment).
+  * containment), and the near-dup cluster labels derived from the
+  * minhash-verified pairs.
   *
   * `persistAll` writes each artifact to the configured
   * `spark.graft.indexDir` store (building in-session first if needed);
   * a LATER session with the same conf then resolves every artifact
-  * consumer (q57/q73/q82/q83/q85/q86/q87 cells, the seven q12-pair
-  * consumers, the basket-affinity queries) from the persisted parquet
+  * consumer (q57/q73/q82/q83/q85/q86/q87 cells, the q12-pair
+  * consumers, the cluster-label consumers q47/q52/q80/q112/q131/q185/
+  * q209/q224, the basket-affinity queries) from the persisted parquet
   * instead of rebuilding — the deployment shape where the index is
   * built once per corpus ingest and every subsequent job reopens it.
   * Explicit write, implicit read: queries never silently persist, but
@@ -21,7 +23,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Indexes {
 
-  /** Build (or reuse) and persist all eight index artifacts for a
+  /** Build (or reuse) and persist all nine index artifacts for a
     * corpus. Requires `spark.graft.indexDir` to be set. */
   def persistAll(spark: SparkSession, sfDir: String): Unit = {
     IndexStore.write(spark, Similarity.trainedCodebook(spark, sfDir),
@@ -30,6 +32,8 @@ object Indexes {
       Similarity.HierCellsArtifact, sfDir)
     IndexStore.write(spark, Dedup.verifiedPairs(spark, sfDir),
       Dedup.PairsArtifact, sfDir)
+    IndexStore.write(spark, Dedup.clusterLabels(spark, sfDir),
+      Dedup.ClustersArtifact, sfDir)
     IndexStore.write(spark, Dedup.verifiedSimhashPairs(spark, sfDir),
       Dedup.SimhashPairsArtifact, sfDir)
     IndexStore.write(spark, Dedup.verifiedContainmentPairs(spark, sfDir),
@@ -52,6 +56,7 @@ object Indexes {
     IndexStore.evict(Similarity.hierCellsCache, spark)
     IndexStore.evict(Similarity.sqStatsCache, spark)
     IndexStore.evict(Dedup.pairCache, spark)
+    IndexStore.evict(Dedup.clusterCache, spark)
     IndexStore.evict(Dedup.simhashPairsCache, spark)
     IndexStore.evict(Dedup.containmentPairsCache, spark)
     IndexStore.evict(TextAnalysis.bpeMergesCache, spark)

@@ -36,7 +36,7 @@ object Pipeline {
     * labels (docs → clusters → size histogram); output is bounded by
     * the largest cluster size, never the corpus. */
   def dedupReport(spark: SparkSession, sfDir: String): DataFrame =
-    Dedup.dupClusters(spark, sfDir)
+    Dedup.clusterLabels(spark, sfDir)
       .groupBy(col("cluster_id"))
       .agg(count(lit(1)).as("cluster_size"))
       .groupBy(col("cluster_size"))
@@ -56,7 +56,7 @@ object Pipeline {
     * partial-aggregable single pass, no window shuffle. */
   def clusterReps(spark: SparkSession, sfDir: String): DataFrame =
     clusterRepsFrom(
-      Dedup.dupClusters(spark, sfDir),
+      Dedup.clusterLabels(spark, sfDir),
       TextAnalysis.quality(spark, sfDir).select(col("doc_id"), col("quality_score")))
 
   /** [[clusterReps]] from PRECOMPUTED cluster labels + quality scores —
@@ -76,29 +76,30 @@ object Pipeline {
       .orderBy("cluster_id")
   }
 
-  /** q52_curation_chain — the REUSE composition the per-query contract
-    * can't show: materialize the verified near-dup pair set ONCE
-    * (localCheckpoint — the expensive MinHash-LSH pass), then chain
+  /** q52_curation_chain — the curation stages chained over the
+    * session's two dedup artifacts, the verified pair set
+    * ([[Dedup.verifiedPairs]]) and the cluster labels derived from it
+    * ([[Dedup.clusterLabels]]):
     *
-    *   - q14's survivor filter ([[Dedup.ngramDedupFrom]]),
-    *   - q31's transitive clusters ([[Dedup.dupClustersFrom]]),
-    *   - q47's canonical reps ([[clusterRepsFrom]])
+    *   - q14's survivor filter ([[Dedup.ngramDedupFrom]]) over the pairs,
+    *   - q31's transitive clusters (the labels),
+    *   - q47's canonical reps ([[clusterRepsFrom]]) over the labels.
     *
-    * from that one frame. Output per cluster: the representative, its
-    * quality, the member count, and how many members the pairwise
-    * survivor filter keeps (n_kept). Running q14+q31+q47 independently
-    * recomputes the LSH pipeline three times (~16 s at sf0.1); the
-    * chain pays it once. n_kept ≥ 1 always — each cluster's minimum
-    * doc_id has no smaller-id partner (a partner would be in the same
-    * cluster), so the kept join is inner on both engines.
+    * Output per cluster: the representative, its quality, the member
+    * count, and how many members the pairwise survivor filter keeps
+    * (n_kept). Neither the LSH pipeline nor the connected-components
+    * loop runs here once the artifacts are built. n_kept ≥ 1 always —
+    * each cluster's minimum doc_id has no smaller-id partner (a partner
+    * would be in the same cluster), so the kept join is inner on both
+    * engines.
     *
-    * At 100 TB the localCheckpoint becomes a persisted pair table
-    * (executor-local blocks here; same plan shape either way). */
+    * At 100 TB both artifacts are persisted tables
+    * ([[Indexes.persistAll]]); same plan shape either way. */
   def curationChain(spark: SparkSession, sfDir: String): DataFrame = {
     val pairs = Dedup.verifiedPairs(spark, sfDir)
     val docs = graft.sources.Tables.documents(spark, sfDir)
     val survivors = Dedup.ngramDedupFrom(docs, pairs).select(col("doc_id"))
-    val labels = Dedup.dupClustersFrom(docs, pairs)
+    val labels = Dedup.clusterLabels(spark, sfDir)
     val qual = TextAnalysis.quality(spark, sfDir)
       .select(col("doc_id"), col("quality_score"))
     val kept = labels.join(survivors, "doc_id")
@@ -252,7 +253,7 @@ object Pipeline {
     * (TakeOrderedAndProject). 10th consumer of the pair artifact. */
   def dupSavings(spark: SparkSession, sfDir: String): DataFrame = {
     val chars = Tables.documents(spark, sfDir).select(col("doc_id"), col("n_chars"))
-    val rep = Dedup.dupClusters(spark, sfDir)
+    val rep = Dedup.clusterLabels(spark, sfDir)
       .join(chars, "doc_id")
       .groupBy(col("cluster_id"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"),
@@ -310,7 +311,7 @@ object Pipeline {
     // instead of two full pipelines joined on doc_id: one corpus scan
     // and one join fewer per run.
     val feats = TextAnalysis.langQualityFeatures(spark, sfDir)
-    val clus = Dedup.dupClusters(spark, sfDir)
+    val clus = Dedup.clusterLabels(spark, sfDir)
     val agg = feats.join(clus, "doc_id")
       .select(col("predicted_lang"),
         when(col("quality_score") >= MixQualityThreshold, "high")
@@ -389,7 +390,7 @@ object Pipeline {
   def dupWeights(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("source"), col("n_chars"))
-    val clus = Dedup.dupClusters(spark, sfDir)
+    val clus = Dedup.clusterLabels(spark, sfDir)
     val sizes = clus.groupBy(col("cluster_id")).agg(count(lit(1)).as("csize"))
     val weighted = docs
       .join(clus, "doc_id")
@@ -425,7 +426,7 @@ object Pipeline {
   def dupQualityLift(spark: SparkSession, sfDir: String): DataFrame = {
     val qual = TextAnalysis.quality(spark, sfDir)
       .select(col("doc_id"), col("quality_score"))
-    val clus = Dedup.dupClusters(spark, sfDir)
+    val clus = Dedup.clusterLabels(spark, sfDir)
     val per = qual.join(clus, "doc_id")
       .select(
         least(floor(col("quality_score") * 10).cast("int"), lit(9)).as("band"),

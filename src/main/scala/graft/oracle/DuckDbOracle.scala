@@ -7,18 +7,6 @@ import graft.operators._
   * against. Engine code never imports this package; the text reads the
   * engine's public constants so both sides share their parameters. */
 object DuckDbOracle {
-  /** Shared CTE: distinct word-3-shingles + all-pairs exact Jaccard over
-    * the documents table — the ground truth the LSH pipelines must equal.
-    *
-    * RECALL ASSUMPTION (q12, q14, q31, q47, q52, q63 near arm): the Spark
-    * side generates candidates via 32×4 minhash banding and verifies them
-    * exactly, while this oracle computes exact ALL-PAIRS Jaccard. They
-    * hash-match only because banding recall at the 0.8 threshold is
-    * ≥ 1-(1-0.8⁴)³² ≈ 1-5e-8 per qualifying pair — an unlucky corpus
-    * could surface a ≥0.8 pair that no band catches and grade as a
-    * mysterious hash mismatch. That event is the documented false-negative
-    * rate of the operator, not a bug; if it ever fires, check the missed
-    * pair's per-band signatures before suspecting the pipeline. */
   /** Shared CTE prefix: q120's per-(type, week) trailing z-scores, ending
     * in `zz(event_type, wk, n_events, k, mean, std, z)` — consumed by
     * q120 (the full report) and q124 (the anomalous-week interval side). */
@@ -70,6 +58,18 @@ object DuckDbOracle {
       |  FROM o
       |)""".stripMargin
 
+  /** Shared CTE: distinct word-3-shingles + all-pairs exact Jaccard over
+    * the documents table — the ground truth the LSH pipelines must equal.
+    *
+    * RECALL ASSUMPTION (q12, q14, q31, q47, q52, q63 near arm): the Spark
+    * side generates candidates via 32×4 minhash banding and verifies them
+    * exactly, while this oracle computes exact ALL-PAIRS Jaccard. They
+    * hash-match only because banding recall at the 0.8 threshold is
+    * ≥ 1-(1-0.8⁴)³² ≈ 1-5e-8 per qualifying pair — an unlucky corpus
+    * could surface a ≥0.8 pair that no band catches and grade as a
+    * mysterious hash mismatch. That event is the documented false-negative
+    * rate of the operator, not a bug; if it ever fires, check the missed
+    * pair's per-band signatures before suspecting the pipeline. */
   private val jaccardCte: String =
     """WITH sh AS (
       |  SELECT DISTINCT doc_id, w[i] || '_' || w[i+1] || '_' || w[i+2] AS g

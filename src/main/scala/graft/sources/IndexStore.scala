@@ -2,8 +2,11 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
-/** Cross-session persistence for index ARTIFACTS — the trained codebook,
-  * the hierarchical cell assignment, and the verified near-dup pair set.
+/** Cross-session persistence for index ARTIFACTS — the trained IVF
+  * codebook, the hierarchical cell assignment, the SQ8 stats, the BPE
+  * merge table, the capped basket table, the three verified near-dup
+  * pair sets, and the near-dup cluster labels derived from the minhash
+  * pairs (the full list is [[graft.operators.Indexes]]).
   *
   * In-session these are memoized localCheckpoints (built once per
   * (session, corpus)); a real deployment builds them once and reopens
@@ -16,7 +19,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *
   * Enable by setting `spark.graft.indexDir` (a runtime SQL conf — no
   * session restart needed). When set, the artifact caches in
-  * [[graft.operators.Similarity]] / [[graft.operators.Dedup]] LOAD a
+  * [[graft.operators.Similarity]], [[graft.operators.Dedup]],
+  * [[graft.operators.TextAnalysis]] and [[graft.operators.Graph]] LOAD a
   * persisted table instead of rebuilding; when absent or the table is
   * missing, they build in-session exactly as before. Writing is always
   * explicit ([[graft.operators.Indexes]].persistAll) — an engine that
@@ -63,14 +67,26 @@ object IndexStore {
     * entries retain one checkpointed frame per corpus until session
     * stop — bounded by the handful of corpora a session touches), and
     * consults the persisted store before building: a persisted artifact
-    * table replaces the in-session build entirely. */
+    * table replaces the in-session build entirely. Every job the load
+    * or build starts carries the description `graft:artifact/<name>`
+    * (an artifact built from another shows the inner name while the
+    * inner one builds); the caller's description is restored after. */
   def memo(
       cache: scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame],
       spark: SparkSession, sfDir: String, name: String)(build: => DataFrame): DataFrame =
     cache.synchronized {
       cache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-      cache.getOrElseUpdate((spark, sfDir), load(spark, name, sfDir).getOrElse(build))
+      cache.getOrElseUpdate((spark, sfDir), {
+        val sc = spark.sparkContext
+        val callerDescription = sc.getLocalProperty(JobDescriptionKey)
+        sc.setJobDescription(s"graft:artifact/$name")
+        try load(spark, name, sfDir).getOrElse(build)
+        finally sc.setJobDescription(callerDescription)
+      })
     }
+
+  /** The local property `SparkContext.setJobDescription` sets. */
+  private val JobDescriptionKey = "spark.job.description"
 
   /** Test/maintenance hook: drop this session's cached artifact entries
     * so the next access re-resolves (against the store, or rebuilds). */

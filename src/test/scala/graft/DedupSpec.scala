@@ -94,6 +94,14 @@ class DedupSpec extends SparkSuite {
     (1L until n.toLong).foreach(i => assert(got(i) == 0L))
   }
 
+  test("cluster-label consumers start no Spark job once the labels artifact is built") {
+    import graft.operators.Pipeline
+    Dedup.clusterLabels(spark, sf)
+    assert(jobsStartedBy(Pipeline.clusterReps(spark, sf)) == 0, "q47")
+    assert(jobsStartedBy(Pipeline.dedupReport(spark, sf)) == 0, "q80")
+    assert(jobsStartedBy(Pipeline.dupSavings(spark, sf)) == 0, "q112")
+  }
+
   test("large-star/small-star matches driver-side union-find on a random graph") {
     import graft.SparkSuite.implicits._
     val rnd = new scala.util.Random(42)

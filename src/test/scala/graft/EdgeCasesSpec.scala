@@ -145,6 +145,37 @@ class EdgeCasesSpec extends SparkSuite {
     }
   }
 
+  test("cluster labels artifact equals q31's rows as a set") {
+    def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
+    def same(dir: String): Unit =
+      assert(rows(Dedup.clusterLabels(spark, dir)) == rows(Dedup.dupClusters(spark, dir)), dir)
+    same(sf)
+    withEmptyCorpus(same)
+    withOneDocCorpus(same)
+  }
+
+  test("a cold artifact build labels its jobs and restores the caller's job description") {
+    val text = "the quick brown fox jumps over the lazy dog near the river bank"
+    withCorpus(
+      Seq((0L, text, "en", "src0", text.length.toLong), (1L, text, "en", "src0", text.length.toLong),
+        (2L, "an entirely different document about something else", "en", "src1", 51L)),
+      Seq.empty) { dir =>
+      val sc = spark.sparkContext
+      sc.setJobDescription("graft_test_caller")
+      try {
+        val labels = jobDescriptionsOf {
+          Dedup.clusterLabels(spark, dir)
+          assert(sc.getLocalProperty("spark.job.description") == "graft_test_caller")
+        }
+        assert(labels.toSet == Set("graft:artifact/dup_clusters", "graft:artifact/dedup_pairs"),
+          labels.distinct.mkString(", "))
+      } finally sc.setJobDescription(null)
+      assert(Dedup.clusterLabels(spark, dir).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+        Map(0L -> 0L, 1L -> 0L, 2L -> 2L))
+    }
+  }
+
   test("reading events changes no session conf; nanosAsLong is a session default") {
     val s = spark.newSession()
     val before = s.conf.getAll

@@ -384,7 +384,8 @@ class ExpressionsSpec extends SparkSuite {
     // ALL mark categories fold, matching DuckDB's utf8proc STRIPMARK:
     // Mc (Bengali vowel sign O) and Me (combining enclosing circle),
     // not just Mn \u2014 verified against strip_accents(nfc_normalize(..))
-    val marks = Seq((10L, "\u0995\u09cb"), (11L, "a\u20dd")).toDF("id", "t")
+    val marksDf = Seq((10L, "\u0995\u09cb"), (11L, "a\u20dd")).toDF("id", "t")
+    val marks = marksDf
       .select(col("id"), N.stripAccents(N.nfc(col("t"))).as("s"))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(marks(10L) == "\u0995", s"Mc not stripped: ${marks(10L)}")
@@ -393,9 +394,10 @@ class ExpressionsSpec extends SparkSuite {
     // U+1D167 MUSICAL SYMBOL COMBINING TREMOLO-1 is Mn but lives outside
     // the BMP \u2014 DuckDB strip_accents('a'||chr(119143)) = 'a'. A per-char
     // (code-unit) loop sees two SURROGATE halves and keeps both.
-    val astral = Seq((12L, "a" + new String(Character.toChars(0x1D167))),
+    val astralDf = Seq((12L, "a" + new String(Character.toChars(0x1D167))),
         (13L, "b" + new String(Character.toChars(0x1D165)))) // Mc U+1D165
       .toDF("id", "t")
+    val astral = astralDf
       .select(col("id"), N.stripAccents(N.nfc(col("t"))).as("s"))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(astral(12L) == "a", s"astral Mn not stripped: ${astral(12L)}")
@@ -408,12 +410,23 @@ class ExpressionsSpec extends SparkSuite {
     }
     assert(viaEval.toSet == Set(folded))
     // the graded queries see the same collapse: q11's key function over
-    // a composed/decomposed pair yields one group (unit-level mirror of
-    // the oracle's strip_accents(nfc_normalize(...)))
+    // a composed/decomposed pair yields one group
     val groups = df.filter(col("id") <= 3)
-      .groupBy(md5(N.stripAccents(N.nfc(col("t")))).as("k"))
+      .groupBy(md5(N.stripAccents(col("t"))).as("k"))
       .agg(count(lit(1)).as("n")).collect()
     assert(groups.length == 1 && groups.head.getLong(1) == 3L)
+    // q11 drops the nfc the oracle's strip_accents(nfc_normalize(...))
+    // applies: strip_accents NFD-decomposes its input itself, so the key
+    // is the same on every fixture row (composed, decomposed, marks,
+    // astral-plane marks)
+    val keyPairs = df.unionByName(marksDf).unionByName(astralDf)
+      .select(col("id"), md5(N.stripAccents(col("t"))).as("k"),
+        md5(N.stripAccents(N.nfc(col("t")))).as("k_nfc"))
+      .collect()
+    assert(keyPairs.length == 8)
+    keyPairs.foreach { r =>
+      assert(r.getString(1) == r.getString(2), s"row ${r.getLong(0)}: nfc changes the q11 key")
+    }
   }
 
   test("jaro_winkler matches the published reference values and conventions") {

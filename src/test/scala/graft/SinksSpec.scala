@@ -36,6 +36,7 @@ class SinksSpec extends SparkSuite {
         val cells = Similarity.hierCells(spark, sf)
           .select(col("vec_id"), col("tc")(0)("id")).collect().map(key).toMap
         val pairs = Dedup.verifiedPairs(spark, sf).collect().map(_.toString).sorted
+        val clusters = Dedup.clusterLabels(spark, sf).collect().map(_.toString).sorted
         val simPairs = Dedup.verifiedSimhashPairs(spark, sf)
           .collect().map(_.toString).sorted
         val contPairs = Dedup.verifiedContainmentPairs(spark, sf)
@@ -45,6 +46,9 @@ class SinksSpec extends SparkSuite {
         assert(new java.io.File(
           IndexStore.artifactPath(dir, Graph.BasketsArtifact, sf)).exists(),
           "persistAll skipped the basket_items artifact")
+        assert(new java.io.File(
+          IndexStore.artifactPath(dir, Dedup.ClustersArtifact, sf)).exists(),
+          "persistAll skipped the dup_clusters artifact")
         // a fresh resolution (empty caches = what a new session sees)
         // must return the persisted rows
         Indexes.evictSession(spark)
@@ -54,6 +58,8 @@ class SinksSpec extends SparkSuite {
           .select(col("vec_id"), col("tc")(0)("id")).collect().map(key).toMap == cells)
         assert(Dedup.verifiedPairs(spark, sf).collect().map(_.toString).sorted
           .sameElements(pairs))
+        assert(Dedup.clusterLabels(spark, sf).collect().map(_.toString).sorted
+          .sameElements(clusters))
         assert(Dedup.verifiedSimhashPairs(spark, sf).collect().map(_.toString).sorted
           .sameElements(simPairs))
         assert(Dedup.verifiedContainmentPairs(spark, sf).collect().map(_.toString).sorted
@@ -78,6 +84,41 @@ class SinksSpec extends SparkSuite {
         Indexes.evictSession(spark)
       }
     }
+  }
+
+  test("evictSession empties every artifact memo of the session") {
+    import graft.operators.{Dedup, Graph, Indexes, Similarity, TextAnalysis}
+    import java.lang.reflect.ParameterizedType
+    type Memo = scala.collection.concurrent.TrieMap[Any, Any]
+    // perfbench's IndexProbe filter (every TrieMap field of the four
+    // artifact modules), narrowed to the DataFrame-valued ones: the
+    // others memoize scalars that no artifact lifecycle owns
+    def dataFrameValued(f: java.lang.reflect.Field): Boolean = f.getGenericType match {
+      case t: ParameterizedType => t.getActualTypeArguments()(1) match {
+        case v: ParameterizedType => v.getRawType == classOf[org.apache.spark.sql.Dataset[_]]
+        case _ => false
+      }
+      case _ => false
+    }
+    val memos = Seq[AnyRef](Dedup, Similarity, TextAnalysis, Graph).flatMap { m =>
+      m.getClass.getDeclaredFields.toSeq
+        .filter(f => classOf[scala.collection.concurrent.TrieMap[_, _]].isAssignableFrom(f.getType))
+        .filter(dataFrameValued)
+        .map { f => f.setAccessible(true); f.getName -> f.get(m).asInstanceOf[Memo] }
+    }
+    assert(memos.map(_._1).contains("clusterCache") && memos.size >= 9, memos.map(_._1))
+    val key = (spark, "graft_evict_guard")
+    try {
+      memos.foreach { case (_, memo) => memo.put(key, spark.emptyDataFrame) }
+      Indexes.evictSession(spark)
+      val kept = memos.collect {
+        case (name, memo) if memo.keys.exists {
+          case (s: org.apache.spark.sql.SparkSession, _) => s eq spark
+          case _ => false
+        } => name
+      }
+      assert(kept.isEmpty, s"evictSession leaves these memos filled: ${kept.mkString(", ")}")
+    } finally memos.foreach { case (_, memo) => memo.remove(key) }
   }
 
   test("csv and json sinks round-trip the wordcount result") {

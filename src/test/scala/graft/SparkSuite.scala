@@ -31,6 +31,36 @@ trait SparkSuite extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory(prefix)
     try f(dir) finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
+
+  /** Jobs started while `body` runs. */
+  def jobsStartedBy(body: => Unit): Int = jobDescriptionsOf(body).size
+
+  /** The job description (null when unset) of each job started while
+    * `body` runs. Listener events arrive in order, so once the start of
+    * a marker job run after `body` is seen, every job `body` started has
+    * been recorded. */
+  def jobDescriptionsOf(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val marker = "graft_job_count_marker"
+    val descriptions = java.util.Collections.synchronizedList(new java.util.ArrayList[String])
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        val d = Option(js.properties).map(_.getProperty("spark.job.description")).orNull
+        if (d == marker) markerSeen.countDown() else descriptions.add(d)
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      val callerDescription = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(callerDescription)
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job not seen")
+      descriptions.toArray(Array.empty[String]).toSeq
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSuite {

@@ -41,31 +41,6 @@ class WordCountSpec extends SparkSuite {
     }
   }
 
-  /** Jobs started while `body` runs. Listener events arrive in order,
-    * so once the start of a marker job run after `body` is seen, every
-    * job `body` started has been counted. */
-  private def jobsStartedBy(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val marker = "graft_job_count_marker"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val markerSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (js.properties != null && js.properties.getProperty("spark.job.description") == marker)
-          markerSeen.countDown()
-        else jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job not seen")
-      jobs.get
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("building the word count over a directory of 40 .txt files starts no Spark job") {
     withTempDir("graft_txt40") { dir =>
       (0 until 40).foreach(i => java.nio.file.Files.writeString(dir.resolve(s"f$i.txt"), s"spark w$i"))
