@@ -55,6 +55,20 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
 
+  /** `key`'s value in a per-session memo, computed by the session's
+    * first caller. Synchronized on `cache`: `TrieMap.getOrElseUpdate`
+    * is not atomic, so two first callers of an expensive `compute` would
+    * both run it. The lock is per map, so a `compute` may resolve
+    * another memo. Entries of stopped sessions are dropped first: each
+    * pins its session, and a checkpointed frame died with the context. */
+  def memo[K, V](
+      cache: scala.collection.concurrent.TrieMap[(SparkSession, K), V],
+      spark: SparkSession, key: K)(compute: => V): V =
+    cache.synchronized {
+      cache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
+      cache.getOrElseUpdate((spark, key), compute)
+    }
+
   def get(): SparkSession = {
     val spark = builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

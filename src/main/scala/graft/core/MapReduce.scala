@@ -35,7 +35,7 @@ object MapReduce {
 
   /** Faithful semantics: reducefn folds the full value iterator per key.
     * Use when the reduction is not associative (rare). */
-  def run[IN, K: Encoder, V, OUT: Encoder](
+  def run[IN, K: Encoder, V](
       source: Dataset[IN],
       mapfn: IN => IterableOnce[(K, V)],
       reducefn: (K, Iterator[V]) => V)(

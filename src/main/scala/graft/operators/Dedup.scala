@@ -1,9 +1,10 @@
 package graft.operators
 
 import graft.functions.{HashFunctions => H, TextFunctions => T}
-import graft.sources.Tables
+import graft.sources.{IndexStore, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.concurrent.TrieMap
 
 /** Deduplication family for LLM-corpus pipelines.
   *
@@ -70,8 +71,9 @@ object Dedup {
 
   /** doc_id + distinct word-3-shingle set. Tokens are bound in their own
     * projection so the tokenizer runs once per doc, not once per shingle
-    * reference (see TextFunctions.shingles). */
-  /** Deliberately NOT spread (Tables.spread): the shingle+minhash chain
+    * reference (see TextFunctions.shingles).
+    *
+    * Deliberately NOT spread (Tables.spread): the shingle+minhash chain
     * is the engine's heaviest scan-side work (2.6 s warm on one task at
     * sf0.1), but interleaved A/B showed its consumers split — q12/q279
     * gain ~0.2-0.8 s while q226/q58 lose ~0.5-0.9 s from the inflated
@@ -82,7 +84,11 @@ object Dedup {
       .select(col("doc_id"), T.wsTokens(col("text")).as("w"))
       .select(col("doc_id"), T.shingleSet(col("w"), ShingleK).as("sh"))
 
-  /** doc_id, m0..m127 minhash signature.
+  /** (doc_id, sig: array<bigint>) — the native-aggregate signature kept
+    * in ARRAY form: the banding step reads the 4 hashes per band via
+    * element_at, so the plan never materializes a 128-column projection
+    * (whose generated code dominated cold compile time for every
+    * minhash-family query).
     *
     * Explode + groupBy rather than per-row array transforms: Spark's
     * higher-order functions (`transform`/`aggregate`) evaluate
@@ -94,11 +100,6 @@ object Dedup {
     * `min` aggregate columns, which ExpressionsSpec proves
     * bit-identical). At 100 TB the shuffle after map-side partial
     * aggregation is only O(docs × 128 longs). */
-  /** (doc_id, sig: array<bigint>) — the native-aggregate signature kept
-    * in ARRAY form: the banding step reads the 4 hashes per band via
-    * element_at, so the plan never materializes a 128-column projection
-    * (whose generated code dominated cold compile time for every
-    * minhash-family query). */
   private[graft] def minhashSignaturesArr(spark: SparkSession, sfDir: String): DataFrame =
     minhashSignaturesOf(shingled(spark, sfDir))
 
@@ -150,6 +151,7 @@ object Dedup {
   def minhashPairs(spark: SparkSession, sfDir: String): DataFrame =
     minhashPairs(spark, sfDir, BucketCap, None)
 
+  private[graft] val pairCache = TrieMap.empty[(SparkSession, String), DataFrame]
   /** Session-scoped MATERIALIZED verified-pair set — the in-session
     * analogue of the persisted pair table a 100 TB deployment keeps
     * next to the corpus (the dedup pipeline's index artifact): the
@@ -161,17 +163,11 @@ object Dedup {
     * extends the reuse across the whole session. The checkpoint is
     * corpus-keyed; result rows are identical to an uncached run
     * (memoization of a deterministic frame, not an approximation). */
-  private[graft] val pairCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  /** Artifact-store name for the verified pair set; a persisted table
-    * under this name replaces the in-session minhash/LSH/verify build
-    * (see [[graft.sources.IndexStore]] / [[Indexes.persistAll]]). */
-  val PairsArtifact = "dedup_pairs"
-  def verifiedPairs(spark: SparkSession, sfDir: String): DataFrame =
-    graft.sources.IndexStore.memo(pairCache, spark, sfDir, PairsArtifact) {
-      minhashPairs(spark, sfDir).localCheckpoint()
-    }
+  val verifiedPairs = IndexStore.Artifact("dedup_pairs", pairCache) { (spark, sfDir) =>
+    minhashPairs(spark, sfDir).localCheckpoint()
+  }
 
+  private[graft] val simhashPairsCache = TrieMap.empty[(SparkSession, String), DataFrame]
   /** Session-scoped materialized SIMHASH pair set (q13's output) — the
     * same artifact treatment as [[verifiedPairs]]: the banded
     * hamming-≤3 pipeline is deterministic, so consumers (q238's Venn
@@ -181,24 +177,20 @@ object Dedup {
     * next to the corpus ([[Indexes.persistAll]] writes them). q13
     * itself stays the raw pipeline so its bench number still prices
     * the build. */
-  private[graft] val simhashPairsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  val SimhashPairsArtifact = "simhash_pairs"
-  def verifiedSimhashPairs(spark: SparkSession, sfDir: String): DataFrame =
-    graft.sources.IndexStore.memo(simhashPairsCache, spark, sfDir, SimhashPairsArtifact) {
+  val verifiedSimhashPairs =
+    IndexStore.Artifact("simhash_pairs", simhashPairsCache) { (spark, sfDir) =>
       simhashPairs(spark, sfDir).localCheckpoint()
     }
 
+  private[graft] val containmentPairsCache = TrieMap.empty[(SparkSession, String), DataFrame]
   /** Session-scoped materialized CONTAINMENT pair set (q181's output) —
     * see [[verifiedSimhashPairs]]; q181 stays the raw pipeline. */
-  private[graft] val containmentPairsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  val ContainmentPairsArtifact = "containment_pairs"
-  def verifiedContainmentPairs(spark: SparkSession, sfDir: String): DataFrame =
-    graft.sources.IndexStore.memo(containmentPairsCache, spark, sfDir, ContainmentPairsArtifact) {
+  val verifiedContainmentPairs =
+    IndexStore.Artifact("containment_pairs", containmentPairsCache) { (spark, sfDir) =>
       containmentDedup(spark, sfDir).localCheckpoint()
     }
 
+  private[graft] val clusterCache = TrieMap.empty[(SparkSession, String), DataFrame]
   /** Session-scoped MATERIALIZED transitive cluster labels — the
     * artifact derived from [[verifiedPairs]]: (doc_id, cluster_id) for
     * every document, UNORDERED. The connected-components loop is a
@@ -208,14 +200,10 @@ object Dedup {
     * raw [[dupClusters]] pipeline so its bench number still prices the
     * build. Lock order: [[clusterCache]] is taken before [[pairCache]]
     * (the build resolves the pair artifact), never the other way. */
-  private[graft] val clusterCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  val ClustersArtifact = "dup_clusters"
-  def clusterLabels(spark: SparkSession, sfDir: String): DataFrame =
-    graft.sources.IndexStore.memo(clusterCache, spark, sfDir, ClustersArtifact) {
-      dupClustersFrom(Tables.documents(spark, sfDir), verifiedPairs(spark, sfDir))
-        .localCheckpoint()
-    }
+  val clusterLabels = IndexStore.Artifact("dup_clusters", clusterCache) { (spark, sfDir) =>
+    dupClustersFrom(Tables.documents(spark, sfDir), verifiedPairs(spark, sfDir))
+      .localCheckpoint()
+  }
 
   /** [[minhashPairs]] with an explicit per-bucket cap + telemetry hook
     * (the cap is output-preserving — see [[CandidatePairs]]). */
@@ -822,13 +810,10 @@ object Dedup {
     * pattern): ONE count job per (session, corpus) decides which fuzzy
     * pair-search plan q135/q176 build; bench reps and co-consumers
     * reuse it. */
-  private val vocabSizeCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
-  private[graft] def partNameVocabSize(spark: SparkSession, sfDir: String): Long = {
-    vocabSizeCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    vocabSizeCache.getOrElseUpdate((spark, sfDir),
+  private val vocabSizeCache = TrieMap.empty[(SparkSession, String), Long]
+  private[graft] def partNameVocabSize(spark: SparkSession, sfDir: String): Long =
+    graft.GraftSession.memo(vocabSizeCache, spark, sfDir)(
       Tables.part(spark, sfDir).select(col("p_name")).distinct().count())
-  }
 
   /** Fuzzy pair search over a name VOCABULARY — the one primitive
     * behind q135 (linkage pairs) and q176 (entity resolution): all

@@ -1,8 +1,9 @@
 package graft.operators
 
-import graft.sources.Tables
+import graft.sources.{IndexStore, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.concurrent.TrieMap
 
 /** q76_pagerank — PageRank over the verified near-duplicate graph: THE
   * canonical iterative MapReduce workload (alongside q01's word count —
@@ -362,19 +363,14 @@ object Graph {
       .localCheckpoint()
   }
 
-  private[graft] val basketCache =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, String), DataFrame]
-  /** Artifact-store name for the capped basket table. */
-  val BasketsArtifact = "basket_items"
+  private[graft] val basketCache = TrieMap.empty[(SparkSession, String), DataFrame]
   /** Session-memoized capped-basket artifact (the verifiedPairs
     * pattern): q126 keeps building raw so the basket-construction cost
     * stays priced through the query that owns it; consumers (q179)
     * read the per-(session, corpus) checkpoint — the basket table a
     * deployment persists once and serves many affinity queries from. */
-  private[graft] def basketArtifact(spark: SparkSession, sfDir: String): DataFrame =
-    graft.sources.IndexStore.memo(basketCache, spark, sfDir, BasketsArtifact) {
-      cappedBaskets(spark, sfDir)
-    }
+  private[graft] val basketArtifact =
+    IndexStore.Artifact("basket_items", basketCache)(cappedBaskets)
 
   /** Unordered within-basket pair supports over the capped baskets. */
   private def basketPairs(capped: DataFrame): DataFrame =

@@ -1,8 +1,9 @@
 package graft.operators
 
-import graft.sources.Tables
+import graft.sources.{IndexStore, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.concurrent.TrieMap
 
 /** Similarity search over the `embeddings` table (`array<float>` 64-d).
   *
@@ -352,13 +353,11 @@ object Similarity {
     * footer read once per session lifetime, not once per query call,
     * and a corpus rewritten between sessions is counted afresh; entries
     * of stopped sessions are dropped (the vocabSizeCache rule). */
-  private val sizeCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
-  private[graft] def corpusSize(spark: SparkSession, sfDir: String): Long = {
-    sizeCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    sizeCache.getOrElseUpdate((spark, sfDir), Tables.embeddings(spark, sfDir).count())
-  }
+  private val sizeCache = TrieMap.empty[(SparkSession, String), Long]
+  private[graft] def corpusSize(spark: SparkSession, sfDir: String): Long =
+    graft.GraftSession.memo(sizeCache, spark, sfDir)(Tables.embeddings(spark, sfDir).count())
 
+  private[graft] val codebookCache = TrieMap.empty[(SparkSession, String), DataFrame]
   /** Session-scoped IVF index artifacts — the trained codebook and the
     * hierarchical corpus→cell assignment are DETERMINISTIC functions of
     * the corpus (sampled Lloyd's + the two-level ranking recurrence),
@@ -369,29 +368,21 @@ object Similarity {
     * rebuilding it per query would be like re-sorting a B-tree per
     * lookup). Results are row-identical to uncached runs; q28 keeps
     * its raw flat build so the un-indexed cost stays priced. */
-  private[graft] val codebookCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  /** Artifact-store name for the trained codebook (see
-    * [[graft.sources.IndexStore]]); a persisted table under this name
-    * replaces the in-session training build. */
-  val CodebookArtifact = "ivf_codebook"
-  private[graft] def trainedCodebook(spark: SparkSession, sfDir: String): DataFrame =
-    graft.sources.IndexStore.memo(codebookCache, spark, sfDir, CodebookArtifact) {
+  private[graft] val trainedCodebook =
+    IndexStore.Artifact("ivf_codebook", codebookCache) { (spark, sfDir) =>
       val v = vecs(spark, sfDir)
       val n = corpusSize(spark, sfDir)
       val k = math.max(IvfMinCentroids, math.ceil(math.sqrt(n.toDouble)).toInt)
       trainCentroids(spark, v, n, k)
     }
 
-  private[graft] val hierCellsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  val HierCellsArtifact = "ivf_cells"
+  private[graft] val hierCellsCache = TrieMap.empty[(SparkSession, String), DataFrame]
   /** Memoized [[hierCellAssignment]] over the [[trainedCodebook]] —
     * (vec_id, tc) with tc[0] the home cell, checkpointed (at 100 TB
     * this is the stored cell-id column of the index table; persisted
     * across sessions via [[graft.operators.Indexes.persistAll]]). */
-  private[graft] def hierCells(spark: SparkSession, sfDir: String): DataFrame =
-    graft.sources.IndexStore.memo(hierCellsCache, spark, sfDir, HierCellsArtifact) {
+  private[graft] val hierCells =
+    IndexStore.Artifact("ivf_cells", hierCellsCache) { (spark, sfDir) =>
       val v = vecs(spark, sfDir)
       val n = corpusSize(spark, sfDir)
       val k = math.max(IvfMinCentroids, math.ceil(math.sqrt(n.toDouble)).toInt)
@@ -2170,14 +2161,10 @@ object Similarity {
     * 16k-row frames — interpreted eval is irrelevant there (NOTES:
     * higher-order functions stay off CORPUS-sized paths, not off
     * knob-bounded frames). */
-  private[graft] val sqStatsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  /** Artifact-store name for the packed SQ8 quantizer. */
-  val SqStatsArtifact = "sq8_quantizer"
-  private[graft] def sqStats(spark: SparkSession, sfDir: String): DataFrame =
-    graft.sources.IndexStore.memo(sqStatsCache, spark, sfDir, SqStatsArtifact) {
-      buildSqStats(spark, sfDir).localCheckpoint()
-    }
+  private[graft] val sqStatsCache = TrieMap.empty[(SparkSession, String), DataFrame]
+  private[graft] val sqStats = IndexStore.Artifact("sq8_quantizer", sqStatsCache) {
+    (spark, sfDir) => buildSqStats(spark, sfDir).localCheckpoint()
+  }
 
   private def buildSqStats(spark: SparkSession, sfDir: String): DataFrame = {
     val st = components(spark, sfDir)

@@ -1,9 +1,10 @@
 package graft.operators
 
 import graft.functions.{HashFunctions => H, TextFunctions => T}
-import graft.sources.Tables
+import graft.sources.{IndexStore, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.graft.native
 
 /** Per-document text analysis for corpus curation — the reference's
@@ -731,19 +732,14 @@ object TextAnalysis {
        |       THEN left(acc, length(acc) - ${x.length}) || '$x$y'
        |       ELSE acc || ' ' || t END))""".stripMargin
 
-  private[graft] val bpeMergesCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** Artifact name for the persisted index tier. */
-  val BpeMergesArtifact = "bpe_merges"
-
+  private[graft] val bpeMergesCache = TrieMap.empty[(SparkSession, String), DataFrame]
   /** The trained merge table as a session index artifact (the
     * `hierCells` convention): built once per (session, corpus) —
     * or loaded from the persisted store — and shared by consumers;
     * [[bpeTrain]] itself stays the raw trainer so q102's bench number
     * keeps pricing the build. */
-  def trainedBpeMerges(spark: SparkSession, sfDir: String): DataFrame =
-    graft.sources.IndexStore.memo(bpeMergesCache, spark, sfDir, BpeMergesArtifact) {
+  val trainedBpeMerges =
+    IndexStore.Artifact("bpe_merges", bpeMergesCache) { (spark, sfDir) =>
       bpeTrain(spark, sfDir).coalesce(1).localCheckpoint()
     }
 

@@ -86,10 +86,8 @@ object Tables {
   /** The schema of the parquet file or directory at `path`, inferred on
     * this session's first read of it and reused for every later read in
     * the same session. */
-  private def schemaOf(spark: SparkSession, path: String): org.apache.spark.sql.types.StructType = {
-    schemaCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    schemaCache.getOrElseUpdate((spark, path), spark.read.parquet(path).schema)
-  }
+  private def schemaOf(spark: SparkSession, path: String): org.apache.spark.sql.types.StructType =
+    graft.GraftSession.memo(schemaCache, spark, path)(spark.read.parquet(path).schema)
 
   /** The single-file table `$sfDir/$name.parquet` as a file stream.
     * File sources need an explicit schema: [[schemaOf]] the same path.

@@ -176,6 +176,16 @@ class EdgeCasesSpec extends SparkSuite {
     }
   }
 
+  test("an index store that is set but unreachable fails the artifact lookup") {
+    withOneDocCorpus { dir =>
+      try {
+        spark.conf.set(graft.sources.IndexStore.ConfKey, "nosuchfs://graft_indexes")
+        intercept[java.io.IOException](Dedup.verifiedPairs(spark, dir))
+      } finally spark.conf.unset(graft.sources.IndexStore.ConfKey)
+      assert(Dedup.verifiedPairs(spark, dir).count() == 0)
+    }
+  }
+
   test("reading events changes no session conf; nanosAsLong is a session default") {
     val s = spark.newSession()
     val before = s.conf.getAll

@@ -13,7 +13,7 @@ class MapReduceSpec extends SparkSuite {
       .select("text").as[String]
     def mapfn(t: String): Iterator[(String, Long)] =
       "[a-z]+".r.findAllIn(t.toLowerCase).map((_, 1L))
-    val faithful = MapReduce.run[String, String, Long, (String, Long)](
+    val faithful = MapReduce.run[String, String, Long](
       docs, mapfn, (_, vs) => vs.sum).collect().toMap
     val reduced = MapReduce.runReduced[String, String, Long](
       docs, mapfn, _ + _).collect().toMap

@@ -25,50 +25,33 @@ class SinksSpec extends SparkSuite {
 
   test("index store: persisted artifacts are read back instead of rebuilt") {
     withTempDir("graft_sink") { root =>
-      import graft.operators.{Dedup, Graph, Indexes, Similarity}
+      import graft.operators.{Indexes, Similarity}
       import graft.sources.IndexStore
       val dir = s"$root/indexes"
-      val key = (r: org.apache.spark.sql.Row) => r.getLong(0) -> r.getLong(1)
+      // the cell assignment is compared by its home cells, (vec_id, tc[0])
+      def rows(a: IndexStore.Artifact): Seq[String] = {
+        val df = a(spark, sf)
+        val compared = if (a eq Similarity.hierCells) df.select(col("vec_id"), col("tc")(0)("id")) else df
+        compared.collect().map(_.toString).sorted.toSeq
+      }
       try {
         spark.conf.set(IndexStore.ConfKey, dir)
         // build + persist the artifacts
-        val codebook = Similarity.trainedCodebook(spark, sf).collect().map(_.toString).sorted
-        val cells = Similarity.hierCells(spark, sf)
-          .select(col("vec_id"), col("tc")(0)("id")).collect().map(key).toMap
-        val pairs = Dedup.verifiedPairs(spark, sf).collect().map(_.toString).sorted
-        val clusters = Dedup.clusterLabels(spark, sf).collect().map(_.toString).sorted
-        val simPairs = Dedup.verifiedSimhashPairs(spark, sf)
-          .collect().map(_.toString).sorted
-        val contPairs = Dedup.verifiedContainmentPairs(spark, sf)
-          .collect().map(_.toString).sorted
-        val baskets = Graph.basketArtifact(spark, sf).collect().map(_.toString).sorted
+        val built = Indexes.artifacts.map(rows)
         Indexes.persistAll(spark, sf)
-        assert(new java.io.File(
-          IndexStore.artifactPath(dir, Graph.BasketsArtifact, sf)).exists(),
-          "persistAll skipped the basket_items artifact")
-        assert(new java.io.File(
-          IndexStore.artifactPath(dir, Dedup.ClustersArtifact, sf)).exists(),
-          "persistAll skipped the dup_clusters artifact")
+        Indexes.artifacts.foreach { a =>
+          assert(new java.io.File(IndexStore.artifactPath(dir, a.name, sf)).exists(),
+            s"persistAll skipped the ${a.name} artifact")
+        }
         // a fresh resolution (empty caches = what a new session sees)
         // must return the persisted rows
         Indexes.evictSession(spark)
-        assert(Similarity.trainedCodebook(spark, sf).collect().map(_.toString).sorted
-          .sameElements(codebook))
-        assert(Similarity.hierCells(spark, sf)
-          .select(col("vec_id"), col("tc")(0)("id")).collect().map(key).toMap == cells)
-        assert(Dedup.verifiedPairs(spark, sf).collect().map(_.toString).sorted
-          .sameElements(pairs))
-        assert(Dedup.clusterLabels(spark, sf).collect().map(_.toString).sorted
-          .sameElements(clusters))
-        assert(Dedup.verifiedSimhashPairs(spark, sf).collect().map(_.toString).sorted
-          .sameElements(simPairs))
-        assert(Dedup.verifiedContainmentPairs(spark, sf).collect().map(_.toString).sorted
-          .sameElements(contPairs))
-        assert(Graph.basketArtifact(spark, sf).collect().map(_.toString).sorted
-          .sameElements(baskets))
+        Indexes.artifacts.zip(built).foreach { case (a, before) =>
+          assert(rows(a) == before, s"${a.name} read back other rows than were persisted")
+        }
         // prove the store (not a rebuild) is the source: tamper the
         // persisted codebook and assert the tampered row comes back
-        val p = IndexStore.artifactPath(dir, Similarity.CodebookArtifact, sf)
+        val p = IndexStore.artifactPath(dir, Similarity.trainedCodebook.name, sf)
         val tampered = spark.read.parquet(p)
           .withColumn("cent_id", col("cent_id") + lit(1000000))
         tampered.write.mode("overwrite").parquet(p + "_t")
@@ -89,7 +72,6 @@ class SinksSpec extends SparkSuite {
   test("evictSession empties every artifact memo of the session") {
     import graft.operators.{Dedup, Graph, Indexes, Similarity, TextAnalysis}
     import java.lang.reflect.ParameterizedType
-    type Memo = scala.collection.concurrent.TrieMap[Any, Any]
     // perfbench's IndexProbe filter (every TrieMap field of the four
     // artifact modules), narrowed to the DataFrame-valued ones: the
     // others memoize scalars that no artifact lifecycle owns
@@ -100,25 +82,24 @@ class SinksSpec extends SparkSuite {
       }
       case _ => false
     }
-    val memos = Seq[AnyRef](Dedup, Similarity, TextAnalysis, Graph).flatMap { m =>
+    val fields = Seq[AnyRef](Dedup, Similarity, TextAnalysis, Graph).flatMap { m =>
       m.getClass.getDeclaredFields.toSeq
         .filter(f => classOf[scala.collection.concurrent.TrieMap[_, _]].isAssignableFrom(f.getType))
         .filter(dataFrameValued)
-        .map { f => f.setAccessible(true); f.getName -> f.get(m).asInstanceOf[Memo] }
+        .map { f => f.setAccessible(true); f.getName -> f.get(m) }
     }
-    assert(memos.map(_._1).contains("clusterCache") && memos.size >= 9, memos.map(_._1))
+    val memos = Indexes.artifacts.map(_.memo)
+    val outside = fields.collect { case (name, f) if memos.count(_ eq f) != 1 => name }
+    assert(outside.isEmpty, s"memos not owned by exactly one registry artifact: ${outside.mkString(", ")}")
+    val unseen = Indexes.artifacts.collect { case a if fields.count(_._2 eq a.memo) != 1 => a.name }
+    assert(unseen.isEmpty, s"registry memos not a distinct module field: ${unseen.mkString(", ")}")
     val key = (spark, "graft_evict_guard")
     try {
-      memos.foreach { case (_, memo) => memo.put(key, spark.emptyDataFrame) }
+      memos.foreach(_.put(key, spark.emptyDataFrame))
       Indexes.evictSession(spark)
-      val kept = memos.collect {
-        case (name, memo) if memo.keys.exists {
-          case (s: org.apache.spark.sql.SparkSession, _) => s eq spark
-          case _ => false
-        } => name
-      }
+      val kept = Indexes.artifacts.collect { case a if a.memo.keys.exists(_._1 eq spark) => a.name }
       assert(kept.isEmpty, s"evictSession leaves these memos filled: ${kept.mkString(", ")}")
-    } finally memos.foreach { case (_, memo) => memo.remove(key) }
+    } finally memos.foreach(_.remove(key))
   }
 
   test("csv and json sinks round-trip the wordcount result") {
